@@ -342,17 +342,14 @@ def _pool() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     pool["ml_quality_scores"] = _quality.quality_scores_entry
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as _minilake,
-    )
-
-    pool["lake_documents_roundtrip"] = _minilake.documents_roundtrip_entry
-    pool["lake_partitioned_scan"] = _minilake.partitioned_scan_entry
-    pool["lake_changes_feed"] = _minilake.changes_feed_entry
-    pool["lake_dv_roundtrip"] = _minilake.dv_roundtrip_entry
-    pool["lake_bloom_lookup"] = _minilake.bloom_lookup_entry
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
         deltaproto as _deltaproto,
     )
+
+    pool["lake_documents_roundtrip"] = _deltaproto.documents_roundtrip_entry
+    pool["lake_partitioned_scan"] = _deltaproto.partitioned_scan_entry
+    pool["lake_changes_feed"] = _deltaproto.changes_feed_entry
+    pool["lake_dv_roundtrip"] = _deltaproto.dv_roundtrip_entry
+    pool["lake_bloom_lookup"] = _deltaproto.bloom_lookup_entry
 
     pool["lake_delta_interop"] = _deltaproto.delta_interop_entry
     pool["lake_delta_merge"] = _deltaproto.delta_merge_entry
@@ -461,17 +458,14 @@ def oracle_sql() -> dict[str, str]:
         pool.update(mod.ORACLES)
     pool["ml_feature_encoding"] = MEDICATIONS_CTE + encoding.ML_FEATURE_ENCODING_SQL
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as _minilake,
-    )
-
-    pool["lake_documents_roundtrip"] = _minilake.ROUNDTRIP_ORACLE_SQL
-    pool["lake_partitioned_scan"] = _minilake.PARTITIONED_ORACLE_SQL
-    pool["lake_changes_feed"] = _minilake.CHANGES_FEED_ORACLE_SQL
-    pool["lake_dv_roundtrip"] = _minilake.DV_ORACLE_SQL
-    pool["lake_bloom_lookup"] = _minilake.BLOOM_LOOKUP_ORACLE_SQL
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
         deltaproto as _deltaproto,
     )
+
+    pool["lake_documents_roundtrip"] = _deltaproto.ROUNDTRIP_ORACLE_SQL
+    pool["lake_partitioned_scan"] = _deltaproto.PARTITIONED_ORACLE_SQL
+    pool["lake_changes_feed"] = _deltaproto.CHANGES_FEED_ORACLE_SQL
+    pool["lake_dv_roundtrip"] = _deltaproto.DV_ORACLE_SQL
+    pool["lake_bloom_lookup"] = _deltaproto.BLOOM_LOOKUP_ORACLE_SQL
 
     pool["lake_delta_interop"] = _deltaproto.DELTA_INTEROP_ORACLE_SQL
     pool["lake_delta_merge"] = _deltaproto.DELTA_MERGE_ORACLE_SQL

@@ -118,9 +118,11 @@ def _corpus_scalars(stats: DataFrame) -> tuple[int, float]:
     `docs.count()` job per query — VERDICT r15 item 9: one action, not
     two).  Computed per query build, never memoized across queries —
     the buffer-pooled docs frame is shared between timed runs and a
-    cross-run memo would cache derived results."""
+    cross-run memo would cache derived results.  An empty corpus has
+    no average length (`avgdl` is NULL); its 0.0 is never divided by,
+    because no (doc, term) row exists to score."""
     row = stats.first()
-    return int(row["n_docs"]), float(row["avgdl"])
+    return int(row["n_docs"]), float(row["avgdl"] or 0.0)
 
 
 def _dl_build_side(n_docs: int, dl: DataFrame) -> DataFrame:

@@ -4,9 +4,9 @@ tables (reference ING:211 `format("delta")...saveAsTable`; the
 every round, but the transaction-log FORMAT is public — the Delta
 PROTOCOL.md spec — so this module speaks it directly).
 
-What this adds over `minilake` (the engine's own commit-log format):
-BYTE-LEVEL interop.  A table written here is a protocol-v1 Delta table
-— `_delta_log/<v>.json` with `protocol` / `metaData` / `add` / `remove`
+This is the engine's table format: the reference lands its table as
+Delta, and a table written here is a protocol-v1 Delta table —
+`_delta_log/<v>.json` with `protocol` / `metaData` / `add` / `remove`
 actions (newline-delimited JSON), hive-layout partition directories,
 relative paths — that any real Delta engine (Spark+delta, DuckDB
 delta, Trino, polars) can read; and `read_delta` folds a `_delta_log`
@@ -15,7 +15,9 @@ produced by any such engine, including parquet CHECKPOINTS via
 column mapping in name mode (v3 `columnMapping` — physical parquet
 names renamed to the logical schema, physical partitionValues keys);
 any OTHER listed reader feature raises loudly rather than mis-read —
-the spec's allowlist rule.
+the spec's allowlist rule.  Per-file bloom filters for point lookups
+ride beside the log as `_delta_index/` sidecars (see
+`BLOOM_COLUMNS_PROPERTY`).
 
 Scale notes: snapshot construction is the same driver-side fold real
 Delta performs at planning time (the log is the tiny side); data stays
@@ -23,8 +25,8 @@ in distributed parquet scans.  Partition values come from the log's
 `partitionValues` (authoritative — partition columns are NOT stored in
 the data files, per the Delta/Hive layout), attached as typed literal
 columns per partition group so Catalyst still prunes and codegens the
-scan.  Commits claim versions with the same atomic put-if-absent
-(`os.link`) rule minilake uses — the optimistic concurrency the
+scan.  Commits claim versions with an atomic put-if-absent (`os.link`
+of a fully-written temp file) — the optimistic concurrency the
 protocol requires of writers.
 """
 
@@ -401,6 +403,30 @@ def add_delta_constraint(
         lines.append(json.dumps({"protocol": proto}))
     lines.append(json.dumps({"metaData": new_meta}))
     return _claim_delta_version(path, lines)
+
+
+def drop_delta_constraint(spark: SparkSession, path: str, name: str) -> int:
+    """ALTER TABLE DROP CONSTRAINT: a metaData update without the
+    `delta.constraints.<name>` key; later writes stop enforcing it."""
+    meta, _live, _v = _fold_delta_state(spark, path, None)
+    if name not in _table_constraints(meta):
+        raise ValueError(f"no constraint named {name!r}")
+    new_meta = json.loads(json.dumps(meta))
+    new_meta["configuration"].pop(f"delta.constraints.{name}")
+    lines = [
+        json.dumps(
+            {
+                "commitInfo": {
+                    "timestamp": int(time.time() * 1000),
+                    "operation": "DROP CONSTRAINT",
+                    "operationParameters": {"name": name},
+                    "engineInfo": "sparkgraft-deltaproto/1.0",
+                }
+            }
+        ),
+        json.dumps({"metaData": new_meta}),
+    ]
+    return _claim_delta_version(path, lines, read_version=_v)
 
 
 def _remove_action(old_add: dict, now_ms: int, data_change: bool) -> dict:
@@ -1440,6 +1466,147 @@ def _file_stats_json(local_path: str) -> str | None:
     )
 
 
+#: Table property declaring the columns that carry a per-file Bloom
+#: filter (comma-separated logical names), set with
+#: `set_delta_properties`.  Every write that lands data files on such a
+#: table writes one sidecar per file under `<table>/_delta_index/`
+#: (Databricks' bloom-index layout); log actions and checkpoints are
+#: untouched, so other engines read the table as plain Delta.
+BLOOM_COLUMNS_PROPERTY = "sparkgraft.bloomFilter.columns"
+_BLOOM_DIR = "_delta_index"
+_BLOOM_MAX_DISTINCT = 200_000  # past this, no bloom (stats still skip)
+_BLOOM_FPP = 0.01
+
+
+def _bloom_build(values) -> dict | None:
+    """Bloom filter over a column's DISTINCT values (classic m/k sizing
+    for ~1% false positives, double hashing from one blake2b digest) —
+    the skipping tier for EQUALITY lookups on high-cardinality,
+    unsorted columns where [min, max] stats cannot prune.  ~1.2 KB per
+    1k distinct values."""
+    import base64
+    import math
+
+    distinct = {v for v in values if v is not None}
+    n = len(distinct)
+    if n == 0 or n > _BLOOM_MAX_DISTINCT:
+        return None
+    m = max(64, int(math.ceil(-n * math.log(_BLOOM_FPP) / (math.log(2) ** 2))))
+    k = max(1, round(m / n * math.log(2)))
+    bits = bytearray((m + 7) // 8)
+    for v in distinct:
+        h1, h2 = _bloom_hashes(v)
+        for i in range(k):
+            pos = (h1 + i * h2) % m
+            bits[pos >> 3] |= 1 << (pos & 7)
+    return {"m": m, "k": k, "bits": base64.b64encode(bytes(bits)).decode()}
+
+
+def _bloom_hashes(v) -> tuple[int, int]:
+    """Two independent 64-bit hashes of a string's or an int's encoding
+    (double-hashing base)."""
+    import hashlib
+
+    raw = v.encode() if isinstance(v, str) else repr(v).encode()
+    d = hashlib.blake2b(raw, digest_size=16).digest()
+    return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little") | 1
+
+
+def _bloom_might_contain(bloom: dict, v) -> bool:
+    import base64
+
+    bits = base64.b64decode(bloom["bits"])
+    m, k = bloom["m"], bloom["k"]
+    h1, h2 = _bloom_hashes(v)
+    for i in range(k):
+        pos = (h1 + i * h2) % m
+        if not bits[pos >> 3] & (1 << (pos & 7)):
+            return False
+    return True
+
+
+def _bloom_cols(meta: dict) -> list[str]:
+    raw = (meta.get("configuration") or {}).get(BLOOM_COLUMNS_PROPERTY)
+    return [c.strip() for c in (raw or "").split(",") if c.strip()]
+
+
+def _bloom_sidecar(path: str, relname: str) -> str:
+    return os.path.join(path, _BLOOM_DIR, *relname.split("/")) + ".bloom.json"
+
+
+def _write_bloom_sidecars(path: str, meta: dict | None, relnames) -> None:
+    """Land one sidecar per data file for the table's declared bloom
+    columns, BEFORE the commit that references the files.  A no-op on
+    tables without the property.  Only string and integer columns are
+    indexed — the types whose values hash the same from the file and
+    from a probe literal.  A file pyarrow cannot open (VARIANT columns)
+    gets no sidecar: readers keep files they cannot rule out.  Entries
+    key on the column's PHYSICAL name."""
+    cols = _bloom_cols(meta or {})
+    if not cols:
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mapping = _physical_name_map(meta)
+    for rel in relnames:
+        if "://" in rel or os.path.isabs(rel):
+            continue  # shallow-clone adds live in another table
+        blooms = {}
+        try:
+            pf = pq.ParquetFile(os.path.join(path, rel))
+            names = set(pf.schema_arrow.names)
+            for c in cols:
+                phys = mapping.get(c, c)
+                if phys not in names:  # partition columns are not in files
+                    continue
+                t = pf.schema_arrow.field(phys).type
+                kind = (
+                    "str" if pa.types.is_string(t) or pa.types.is_large_string(t)
+                    else "int" if pa.types.is_integer(t)
+                    else None
+                )
+                b = kind and _bloom_build(
+                    pf.read(columns=[phys]).column(phys).to_pylist()
+                )
+                if b:
+                    blooms[phys] = {**b, "kind": kind}
+        except (OSError, pa.ArrowException):
+            continue
+        if blooms:
+            dest = _bloom_sidecar(path, rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            with open(dest + ".tmp", "w") as fh:
+                json.dump(blooms, fh)
+            os.replace(dest + ".tmp", dest)
+
+
+def _bloom_excludes(path: str, relname: str, phys: str, value) -> bool:
+    """True iff the file's sidecar PROVES the column never equals
+    `value`.  Sidecar entries key on the PHYSICAL column name, which a
+    rename never changes, so a later column taking the old logical
+    name can never be tested against another column's filter.
+    A probe of another type than the indexed column (a string against
+    an int column, say) proves nothing, so the file is kept."""
+    if isinstance(value, float) and value.is_integer():
+        value = int(value)
+    kind = (
+        "str" if isinstance(value, str)
+        else "int" if isinstance(value, int) and not isinstance(value, bool)
+        else None
+    )
+    try:
+        with open(_bloom_sidecar(path, relname)) as fh:
+            bloom = json.load(fh).get(phys)
+    except (OSError, ValueError):
+        return False
+    return (
+        bloom is not None
+        and bloom.get("kind") == kind
+        and not _bloom_might_contain(bloom, value)
+    )
+
+
 def _phys_select(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """Rename a logical frame to the mapping's PHYSICAL namespace,
     stamping `parquet.field.id` column metadata on id-mode tables
@@ -1762,6 +1929,7 @@ def write_delta(
         df, path, partition_by, mapping=mapping,
         shred_variants=shredded_variants,
     )
+    _write_bloom_sidecars(path, existing_meta, [f[0] for f in files])
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -1954,6 +2122,8 @@ def _add_outside_range(add: dict, part_cols: list[str], col: str, lo, hi) -> boo
         return False
     try:
         s = json.loads(stats)
+        if s.get("numRecords") == 0:
+            return True  # an empty file holds no row in any range
         mn = s.get("minValues", {}).get(col)
         mx = s.get("maxValues", {}).get(col)
     except (ValueError, AttributeError):
@@ -1971,7 +2141,9 @@ def read_delta_pruned(
     JSON) — no footer reads at query time.  Returns (frame filtered to
     the range, files_read, files_skipped).  Works identically on
     tables written by this module or by any engine that records
-    per-file stats (they all do)."""
+    per-file stats (they all do).  A point lookup (`lo == hi`) on a
+    column named by `BLOOM_COLUMNS_PROPERTY` also skips the surviving
+    files whose `_delta_index` sidecar rules the value out."""
     from pyspark.sql.types import StructType
 
     meta, live, _v = _fold_delta_state(spark, path, None)
@@ -2020,6 +2192,12 @@ def read_delta_pruned(
             skipped += 1
         else:
             kept[fname] = add
+    if lo == hi and col in _bloom_cols(meta):
+        for fname in [
+            f for f in kept if _bloom_excludes(path, f, phys_col, lo)
+        ]:
+            del kept[fname]
+            skipped += 1
     cond = F.col(col).between(lo, hi)
     if not kept:
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -2316,6 +2494,7 @@ def _delete_delta_pred(
         kept = _rt_materialize(kept, rt_cols)
         dropped = dropped.drop("_row_id", "_row_commit_version")
     files = _land_parquet(kept, path, part_cols or None, mapping=mapping)
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     cdc_files = _land_cdc(
         dropped.withColumn("_change_type", F.lit("delete")), path,
         mapping=mapping,
@@ -2492,6 +2671,7 @@ def _delete_where_delta_dv(
         post_files = _land_parquet(
             post, path, part_cols or None, mapping=mapping
         )
+        _write_bloom_sidecars(path, meta, [f[0] for f in post_files])
         cdc_df = pre.withColumn(
             "_change_type", F.lit("update_preimage")
         ).unionByName(
@@ -2659,8 +2839,11 @@ def read_changes_delta(
       changes (they carry `_change_type`); file actions are ignored;
     - otherwise insert-only commits (all dataChange adds) are inserts,
       delete-only commits (all dataChange removes) are whole-file
-      deletes read back from the still-present pre-image files, and
-      OVERWRITE commits are exact as full-snapshot delete + insert;
+      deletes read back from the still-present pre-image files,
+      OVERWRITE commits are exact as full-snapshot delete + insert,
+      and RESTORE commits are exact file by file (a file re-added
+      under another deletion vector contributes the rows the two
+      DVs disagree on);
     - commits whose actions all carry `dataChange: false` (OPTIMIZE /
       checkpoint rewrites) contribute nothing;
     - any other mixed rewrite without `cdc` raises — per the spec a
@@ -2715,11 +2898,27 @@ def read_changes_delta(
                 for a in acts
                 if "remove" in a and a["remove"].get("dataChange", True)
             }
-            if adds and removes:
-                info = next(
-                    (a["commitInfo"] for a in acts if "commitInfo" in a), {}
-                )
-                op = (info.get("operation") or "").upper()
+            info = next(
+                (a["commitInfo"] for a in acts if "commitInfo" in a), {}
+            )
+            op = (info.get("operation") or "").upper()
+            if op == "RESTORE":
+                # a restore rewrites no rows: a file it re-adds under
+                # another deletion vector changes exactly the rows the
+                # two DVs disagree on; every other add/remove is whole
+                for p in [p for p in adds if p in pre_live]:
+                    removes.pop(p, None)
+                    before = _read_adds(spark, path, meta, {p: pre_live[p]})
+                    after = _read_adds(spark, path, meta, {p: adds.pop(p)})
+                    for df, kind in (
+                        (after.exceptAll(before), "insert"),
+                        (before.exceptAll(after), "delete"),
+                    ):
+                        frames.append(
+                            df.withColumn("_change_type", F.lit(kind))
+                            .withColumn("_commit_version", F.lit(v))
+                        )
+            elif adds and removes:
                 mode = (info.get("operationParameters") or {}).get("mode", "")
                 if not (op == "WRITE" and str(mode).upper() == "OVERWRITE"):
                     raise ValueError(
@@ -2914,6 +3113,7 @@ def _update_delta_pred(
         pre = pre.drop("_row_id", "_row_commit_version")
         post = post.drop("_row_id", "_row_commit_version")
     files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     cdc = (
         pre.withColumn("_change_type", F.lit("update_preimage"))
         .unionByName(
@@ -3018,6 +3218,7 @@ def optimize_zorder_delta(
         # a re-layout copies rows between files — lineage materializes
         clustered = _rt_materialize(clustered, rt_cols)
     files = _land_parquet(clustered, path, part_cols or None, mapping=mapping)
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -3182,6 +3383,7 @@ def merge_upsert_delta(
     if rt_cols and touched:
         merged = _rt_materialize(merged, rt_cols)
     files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     # MERGE change feed: preimage/postimage for matched, insert for new
     cdc_frames = []
     if matched_old is not None:
@@ -3307,6 +3509,7 @@ def delete_keys_delta(
     deleted = old_rows.join(F.broadcast(keys), key, "left_semi")
     merged = _rt_materialize(carried, rt_cols) if rt_cols else carried
     files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     cdc = deleted
     if rt_cols:
         cdc = cdc.drop("_row_id", "_row_commit_version")
@@ -3386,6 +3589,11 @@ def rename_delta_column(spark: SparkSession, path: str, old: str, new: str) -> i
     if new in names:
         raise ValueError(f"column {new!r} already exists")
     conf = dict(meta.get("configuration") or {})
+    bloom = _bloom_cols(meta)
+    if old in bloom:  # a declared bloom column keeps its index
+        conf[BLOOM_COLUMNS_PROPERTY] = ",".join(
+            new if c == old else c for c in bloom
+        )
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -3461,9 +3669,11 @@ def set_delta_properties(
     updating the table configuration (None values UNSET).  The knobs
     other operations honor land here — `delta.checkpointInterval`
     (post-commit auto-checkpointing), `delta.appendOnly` (write
-    guard), retention properties.  Protocol-governed properties
-    (columnMapping mode, constraints) refuse — they have dedicated
-    helpers that also manage the protocol/feature side."""
+    guard), retention properties, `BLOOM_COLUMNS_PROPERTY` (per-file
+    bloom sidecars; setting it also indexes the live files).
+    Protocol-governed properties (columnMapping mode, constraints)
+    refuse — they have dedicated helpers that also manage the
+    protocol/feature side."""
     guarded = (
         "delta.columnMapping.",
         "delta.constraints.",
@@ -3481,13 +3691,18 @@ def set_delta_properties(
                 "dedicated helper (rename/drop_delta_column, "
                 "add_delta_constraint, enable_row_tracking)"
             )
-    meta, _live, _v = _fold_delta_state(spark, path, None)
+    meta, live, _v = _fold_delta_state(spark, path, None)
     conf = dict(meta.get("configuration") or {})
     for k, v in props.items():
         if v is None:
             conf.pop(k, None)
         else:
             conf[str(k)] = str(v)
+    if props.get(BLOOM_COLUMNS_PROPERTY):
+        # declaring bloom columns indexes the files already live too
+        _write_bloom_sidecars(
+            path, {**meta, "configuration": conf}, list(live)
+        )
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -3936,6 +4151,7 @@ def recluster_delta(
     if rt_cols:
         snap = _rt_materialize(snap, rt_cols)
     files = _land_parquet(snap, path, None, mapping=_column_mapping(meta))
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -4167,6 +4383,7 @@ def compact_delta(spark: SparkSession, path: str, target_mb: int = 128) -> int:
         # compaction copies rows between files — lineage materializes
         snap = _rt_materialize(snap, rt_cols)
     files = _land_parquet(snap, path, part_cols or None, mapping=mapping)
+    _write_bloom_sidecars(path, meta, [f[0] for f in files])
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -4199,6 +4416,46 @@ def compact_delta(spark: SparkSession, path: str, target_mb: int = 128) -> int:
     _v_new = _claim_delta_version(path, lines, read_version=_v)
     _maybe_auto_checkpoint(spark, path, _v_new)
     return _v_new
+
+
+def maybe_compact_delta(
+    spark: SparkSession,
+    path: str,
+    max_live_files: int = 64,
+    target_mb: int = 128,
+    max_dv_ratio: float | None = None,
+) -> int | None:
+    """Auto-OPTIMIZE rule for streaming sinks: `compact_delta` when the
+    live-file count exceeds `max_live_files`, or (with `max_dv_ratio`)
+    when deletion vectors hide more than that fraction of the table's
+    rows — the merge-on-read rent comes due and the rewrite pays it
+    off (the trigger Delta's auto-compaction uses).  Threshold-driven,
+    not per-batch: a per-batch rewrite would be O(table) work per
+    trigger.  Decided from the log alone — each add's DV `cardinality`
+    against its stats `numRecords`; when any live file lacks
+    `numRecords` the ratio is unknowable without a scan, so the DV
+    rule declines.  Returns the compaction version, or None."""
+    _meta, live, _v = _fold_delta_state(spark, path, None)
+    if len(live) > max_live_files:
+        return compact_delta(spark, path, target_mb=target_mb)
+    if max_dv_ratio is None or not any(
+        a.get("deletionVector") for a in live.values()
+    ):
+        return None
+    totals = [
+        json.loads(a["stats"]).get("numRecords") if a.get("stats") else None
+        for a in live.values()
+    ]
+    if None in totals or sum(totals) == 0:
+        return None
+    hidden = sum(
+        int(a["deletionVector"].get("cardinality") or 0)
+        for a in live.values()
+        if a.get("deletionVector")
+    )
+    if hidden / sum(totals) > max_dv_ratio:
+        return compact_delta(spark, path, target_mb=target_mb)
+    return None
 
 
 # --------------------------------------------------------------------------
@@ -4252,19 +4509,6 @@ def _dv_positions(path: str, desc: dict) -> list[int]:
     if magic != _DV_MAGIC:
         raise ValueError(f"bad deletion-vector magic {magic}")
     return roaring.deserialize_rbm64(data[4:])
-
-
-def _write_dv_file(path: str, bitmaps: dict[str, list[int]]) -> dict[str, dict]:
-    """Positions-list convenience wrapper over `_write_dv_blobs`."""
-    from . import roaring
-
-    return _write_dv_blobs(
-        path,
-        {
-            f: (roaring.serialize_rbm64(v), len(set(v)))
-            for f, v in bitmaps.items()
-        },
-    )
 
 
 def _write_dv_blobs(
@@ -4459,19 +4703,25 @@ def vacuum_delta(
     if not vs:
         return 0
     retained = vs[-(retain_versions + 1) :]
+    # ONE forward fold: a file live in any retained snapshot is live in
+    # the oldest one or added by a later retained commit, so the log is
+    # read O(tail) times in total, never O(retained x tail)
+    _meta, live, _v = _fold_delta_state(spark, path, retained[0])
+    adds = list(live.values())
     referenced: set[str] = set()
     for v in retained:
-        _meta, live, _v = _fold_delta_state(spark, path, v)
-        for f, add in live.items():
-            referenced.add(f)
-            dv = add.get("deletionVector")
-            if dv:
-                name = _dv_file_name(path, dv)
-                if name:
-                    referenced.add(name)
         for a in _read_actions(path, v):
             if "cdc" in a:
                 referenced.add(a["cdc"]["path"])
+            elif "add" in a and v > retained[0]:
+                adds.append(a["add"])
+    for add in adds:
+        referenced.add(add["path"])
+        dv = add.get("deletionVector")
+        if dv:
+            name = _dv_file_name(path, dv)
+            if name:
+                referenced.add(name)
     # CDF replay over the retained window also needs cdc files of the
     # retained commits themselves (covered above); everything else is
     # reclaimable once old enough
@@ -4498,6 +4748,8 @@ def vacuum_delta(
                 continue
             os.unlink(full)
             deleted += 1
+            if os.path.exists(_bloom_sidecar(path, rel)):
+                os.unlink(_bloom_sidecar(path, rel))
     return deleted
 
 
@@ -4597,7 +4849,12 @@ def _read_adds(
         )
         groups.setdefault(key, []).append(fname)
     frames = []
-    for key, fs in sorted(groups.items()):
+    # NULL partition values sort first (a bare sort cannot order None
+    # against strings)
+    for key, fs in sorted(
+        groups.items(),
+        key=lambda kv: [(v is not None, v or "") for v in kv[0]],
+    ):
         dv_files = {
             f: adds[f]["deletionVector"]
             for f in fs
@@ -5408,28 +5665,313 @@ def convert_to_delta(
     return _claim_delta_version(path, lines, read_version=None)
 
 
-def delta_to_minilake(
-    spark: SparkSession, delta_path: str, minilake_path: str
-) -> int:
-    """Migration helper — the 'switch engines' story: snapshot a real
-    Delta table and commit it into a minilake table (same partition
-    spec), so every minilake capability (zone maps, DVs, CDF, restore)
-    applies from the next commit on."""
-    from . import minilake
-
-    meta, _live, _v = _fold_delta_state(spark, delta_path, None)
-    spec = list(meta.get("partitionColumns") or [])
-    snap = read_delta(spark, delta_path)
-    return minilake.commit_append(
-        snap, minilake_path, partition_by=spec or None
-    )
-
-
 # --------------------------------------------------------------------------
 # Driver entry
 # --------------------------------------------------------------------------
 
 _DELTA_LAKE_VERSION = 2  # v2: fixture rebuilt so the checkpoint carries add stats
+
+
+#: Bump when the roundtrip lake's pipeline changes shape — the entry
+#: reuses a previously-built lake only if its version tag matches.
+_ROUNDTRIP_LAKE_VERSION = 1
+#: doc_id range deleted by the roundtrip pipeline.
+_ROUNDTRIP_DELETE_LO, _ROUNDTRIP_DELETE_HI = 100, 199
+
+
+def _ensure_roundtrip_lake(spark: SparkSession, sf_dir: str) -> str:
+    """Build (once per version+sf, under spark-warehouse) the shared
+    append → stats-pruned DELETE → compact documents lake used by the
+    roundtrip and changes-feed entries."""
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("delta_docs", _ROUNDTRIP_LAKE_VERSION, sf_dir),
+        "docs_lake",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text"
+        )
+        write_delta(docs.repartitionByRange(8, "doc_id"), path)
+        delete_where_delta(
+            spark, path, "doc_id", _ROUNDTRIP_DELETE_LO, _ROUNDTRIP_DELETE_HI
+        )
+        compact_delta(spark, path, target_mb=128)
+    return path
+
+
+def documents_roundtrip_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-gated entry that value-checks the TABLE FORMAT itself:
+    ingest `documents` into a Delta table (append with per-file stats),
+    run a stats-pruned DELETE of a doc_id range and an OPTIMIZE
+    compaction, then aggregate the surviving snapshot per source.  The
+    DuckDB oracle states the same aggregate over the raw parquet with
+    the deleted range excluded — so a value match proves the commit
+    log, stats pruning, delete rewrite, and compaction preserved
+    content EXACTLY (not just row counts).  The lake is built once per
+    (version, sf) under spark-warehouse and reused — the same
+    build-once pattern as the ANN/topic serving indexes."""
+    snap = read_delta(spark, _ensure_roundtrip_lake(spark, sf_dir))
+    return (
+        snap.groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+            F.count_distinct("lang").cast("bigint").alias("n_langs"),
+        )
+        .orderBy("source")
+    )
+
+
+ROUNDTRIP_ORACLE_SQL = f"""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars,
+       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
+FROM documents
+WHERE doc_id NOT BETWEEN {_ROUNDTRIP_DELETE_LO} AND {_ROUNDTRIP_DELETE_HI}
+GROUP BY source
+ORDER BY source
+"""
+
+
+#: Bump when the DV entry's pipeline changes shape.
+_DV_LAKE_VERSION = 1
+_DV_DELETE_A = (100, 199)
+_DV_DELETE_B = (300, 349)
+
+
+def dv_roundtrip_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-gated entry for DELETION VECTORS: ingest `documents`, run
+    TWO stacked DV deletes (no data file is rewritten — the commits
+    attach roaring DVs; asserted in tests/test_lake_dv.py), then
+    aggregate the visible snapshot per source.  The DuckDB oracle
+    states the same aggregate over the raw parquet with both ranges
+    excluded, so a value match proves position capture, DV stacking,
+    and the scan-time DV filter hide EXACTLY the deleted rows.  Lake
+    built once per (version, sf), like its siblings."""
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("delta_dv", _DV_LAKE_VERSION, sf_dir),
+        "docs_lake_dv",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text"
+        )
+        write_delta(docs.repartitionByRange(8, "doc_id"), path)
+        delete_where_delta(spark, path, "doc_id", *_DV_DELETE_A, strategy="dv")
+        delete_where_delta(spark, path, "doc_id", *_DV_DELETE_B, strategy="dv")
+    snap = read_delta(spark, path)
+    return (
+        snap.groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+            F.sum("doc_id").cast("bigint").alias("sum_ids"),
+        )
+        .orderBy("source")
+    )
+
+
+DV_ORACLE_SQL = f"""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+FROM documents
+WHERE doc_id NOT BETWEEN {_DV_DELETE_A[0]} AND {_DV_DELETE_A[1]}
+  AND doc_id NOT BETWEEN {_DV_DELETE_B[0]} AND {_DV_DELETE_B[1]}
+GROUP BY source
+ORDER BY source
+"""
+
+
+def changes_feed_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-gated entry for the CHANGE DATA FEED: over the shared
+    append → pruned-DELETE → compact lake, `read_changes_delta` from
+    version 0 must emit every ingested row as an 'insert', the deleted
+    doc_id range as 'delete' rows (the delete commit's `cdc` file), and
+    NOTHING for the compaction (its actions carry `dataChange: false`).
+    The DuckDB oracle states both legs straight off the raw parquet, so
+    a value match proves the feed is exact and maintenance commits are
+    invisible to incremental consumers."""
+    feed = read_changes_delta(
+        spark, _ensure_roundtrip_lake(spark, sf_dir), since_version=0
+    )
+    return (
+        feed.groupBy(
+            F.col("_change_type").alias("change_type"), F.col("source")
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_rows"),
+            F.sum("doc_id").cast("bigint").alias("sum_ids"),
+        )
+        .orderBy("change_type", "source")
+    )
+
+
+CHANGES_FEED_ORACLE_SQL = f"""
+SELECT change_type, source, n_rows, sum_ids FROM (
+  SELECT 'insert' AS change_type, source,
+         CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+  FROM documents GROUP BY source
+  UNION ALL
+  SELECT 'delete' AS change_type, source,
+         CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+  FROM documents
+  WHERE doc_id BETWEEN {_ROUNDTRIP_DELETE_LO} AND {_ROUNDTRIP_DELETE_HI}
+  GROUP BY source
+)
+ORDER BY change_type, source
+"""
+
+
+#: Bump when the partitioned-scan entry's pipeline changes shape.
+_PART_LAKE_VERSION = 1
+_PART_SCAN_LANG = "en"
+_PART_SCAN_LO, _PART_SCAN_HI = 0, 249
+
+
+def partitioned_scan_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-gated entry for PARTITIONED Delta tables: ingest
+    `documents` PARTITIONED BY (lang), range-clustered on doc_id so the
+    per-file stats are tight, then answer a lang + doc_id box query:
+    `read_delta_pruned` drops files whose doc_id stats miss the range,
+    and the filter on the partition literal drops every non-'en'
+    partition group at plan time.  The surviving files are aggregated
+    per source.  The DuckDB oracle states the same aggregate over the
+    raw parquet, so a value match proves partition landing,
+    partitionValues reconstruction, and both skipping tiers lost no
+    rows and leaked none from pruned partitions.  The skip COUNTS are
+    pinned in tests/test_lake_partitioned.py.  Lake built once per
+    (version, sf) under spark-warehouse, like the roundtrip entry."""
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("delta_part", _PART_LAKE_VERSION, sf_dir),
+        "docs_lake_part",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text"
+        )
+        write_delta(
+            docs.repartitionByRange(4, "doc_id"), path, partition_by=["lang"]
+        )
+    df, _read, _skipped = read_delta_pruned(
+        spark, path, "doc_id", _PART_SCAN_LO, _PART_SCAN_HI
+    )
+    return (
+        df.filter(F.col("lang") == _PART_SCAN_LANG)
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+        )
+        .orderBy("source")
+    )
+
+
+PARTITIONED_ORACLE_SQL = f"""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars
+FROM documents
+WHERE lang = '{_PART_SCAN_LANG}'
+  AND doc_id BETWEEN {_PART_SCAN_LO} AND {_PART_SCAN_HI}
+GROUP BY source
+ORDER BY source
+"""
+
+
+#: Bump when the bloom entry's pipeline changes shape.
+_BLOOM_LAKE_VERSION = 1
+#: Probe ids present at every SF (documents spans 0..499 even at
+#: sf0.001) plus two keys absent from every file — the absent probes
+#: exercise the all-files-skipped path (bloom answers "definitely
+#: not here" for every file and the scan touches nothing).
+_BLOOM_PROBE_IDS = (7, 57, 123, 250, 411)
+_BLOOM_ABSENT_KEYS = ("not-a-key-a", "not-a-key-b")
+
+
+def _bloom_lake_path(sf_dir: str) -> str:
+    from ..functions.scale import default_index_dir
+
+    return os.path.join(
+        default_index_dir("delta_bloom", _BLOOM_LAKE_VERSION, sf_dir),
+        "docs_lake_bloom",
+    )
+
+
+def bloom_lookup_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-gated entry for BLOOM-FILTER file skipping: ingest
+    `documents` keyed by `md5(doc_id)` — a high-cardinality UNSORTED
+    string column — landed as hash-distributed files on a table whose
+    `BLOOM_COLUMNS_PROPERTY` names `key`, so every file's [min, max]
+    key range spans ~the whole hex space and stats can skip NOTHING;
+    only the per-file bloom sidecars can prune a point lookup.  The
+    entry probes five present keys and two absent ones through
+    `read_delta_pruned` and returns the matching docs; the DuckDB
+    oracle states the same lookup over the raw parquet (`md5` is
+    hex-identical in Spark and DuckDB), so a value match proves the
+    bloom tier never false-skips and leaks nothing.  The skip COUNTS
+    (most files pruned per probe, all files for absent keys) are
+    pinned in tests/test_minilake.py.  Lake built once per
+    (version, sf) under spark-warehouse, like its siblings."""
+    import hashlib
+
+    from . import load_table
+
+    path = _bloom_lake_path(sf_dir)
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "source",
+            "lang",
+            "n_chars",
+            F.md5(F.col("doc_id").cast("string")).alias("key"),
+        )
+        # Four commits, each hash-distributed across two files: eight
+        # live files whose key ranges all overlap, the layout where
+        # only the bloom tier has skipping power.  The property lands
+        # after the first commit (indexing its files) and every later
+        # append writes its own sidecars.
+        for b in range(4):
+            write_delta(
+                docs.filter(F.col("doc_id") % 4 == b).repartition(2, "key"),
+                path,
+            )
+            if b == 0:
+                set_delta_properties(
+                    spark, path, {BLOOM_COLUMNS_PROPERTY: "key"}
+                )
+    probes = [
+        hashlib.md5(str(i).encode()).hexdigest() for i in _BLOOM_PROBE_IDS
+    ] + list(_BLOOM_ABSENT_KEYS)
+    out = None
+    for key in probes:
+        df, _read, _skipped = read_delta_pruned(spark, path, "key", key, key)
+        part = df.select("doc_id", "source", "lang", "n_chars")
+        out = part if out is None else out.unionByName(part)
+    return out.orderBy("doc_id")
+
+
+BLOOM_LOOKUP_ORACLE_SQL = f"""
+SELECT doc_id, source, lang, n_chars
+FROM documents
+WHERE md5(CAST(doc_id AS VARCHAR)) IN (
+    {", ".join(f"md5(CAST({i} AS VARCHAR))" for i in _BLOOM_PROBE_IDS)}
+)
+ORDER BY doc_id
+"""
 
 
 _DELTA_MERGE_LAKE_VERSION = 1

@@ -1,8 +1,7 @@
 """Spark DataSource over the REAL Delta log — `sources/deltaproto.py`
 surfaced as a first-class `format("deltaproto")` for batch and
-Structured Streaming, the same contract `lakesource.py` gives the
-minilake tier (and the same contract delta-spark gives real Delta
-tables: a table is also a stream).
+Structured Streaming — the contract delta-spark gives real Delta
+tables: a table is also a stream.
 
 - **Batch** (`spark.read.format("deltaproto").load(path)`): the
   current snapshot, one live add-action → one `InputPartition`; each
@@ -24,6 +23,13 @@ tables: a table is also a stream).
   (partition values and prior DVs applied via the rolled-forward
   pre-image fold), and underivable mixed rewrites fail loudly —
   `deltaproto.read_changes_delta`'s rules, per micro-batch.
+- **Writes** (`df.write.format("deltaproto")` append/overwrite, and
+  `df.writeStream.format("deltaproto")`): tasks land parquet files,
+  the driver commits ONE log version per job / micro-batch; the sink
+  is exactly-once through the spec's `txn` action.
+  `delta_stream_sink` is the foreachBatch sink over `write_delta`
+  for targets the Python writer refuses (partitioned, guarded), with
+  an opt-in post-drain compaction rule.
 
 Readers run in Python workers on pyarrow; rows are schema-ordered
 tuples.  The slow general path by design — bulk snapshot reads stay
@@ -45,6 +51,7 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamWriter,
+    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
@@ -550,7 +557,31 @@ class DeltaProtoStreamReader(SimpleDataSourceStreamReader):
                 removes = [
                     r for r in all_removes if r.get("dataChange", True)
                 ]
-                if adds and removes:
+                info = next(
+                    (a["commitInfo"] for a in acts if "commitInfo" in a), {}
+                )
+                if (info.get("operation") or "").upper() == "RESTORE":
+                    # a restore rewrites no rows: a file re-added under
+                    # another DV changes only the positions the two
+                    # DVs disagree on
+                    for p in [p for p in adds if p in pre_live]:
+                        removes = [r for r in removes if r["path"] != p]
+                        add = adds.pop(p)
+                        old, new = (
+                            set(dp._dv_positions(self.path, dv))
+                            if (dv := a.get("deletionVector"))
+                            else set()
+                            for a in (pre_live[p], add)
+                        )
+                        for pos, kind in (
+                            (old - new, "insert"),
+                            (new - old, "delete"),
+                        ):
+                            for r in _add_rows(
+                                self.path, meta, add, self.field_names, pos
+                            ):
+                                rows.append(r + (kind, v))
+                elif adds and removes:
                     raise ValueError(
                         f"commit {v}: mixed add+remove rewrite without cdc "
                         "actions — change feed not derivable"
@@ -605,64 +636,77 @@ class _DeltaWriteMessage(WriterCommitMessage):
     n_rows: int
 
 
-class DeltaProtoStreamWriter(DataSourceStreamWriter):
-    """Streaming sink (`df.writeStream.format("deltaproto")`): the
-    engine's at-least-once micro-batch replay becomes exactly-once via
-    the Delta spec's `txn` action — each commit carries
-    (appId, version=batchId) and a replayed batch whose id is not
-    newer than the appId's committed txn state commits NOTHING (its
-    just-landed files stay unreferenced, `vacuum_delta` fodder).
-    Tasks land immutable uuid parquet files; `commit` claims one log
-    version per micro-batch with per-file stats, creating the table
-    (protocol + metaData) on the first commit.  Unpartitioned targets
-    only — the tuple-at-a-time Python path cannot land hive tuples."""
+class DeltaProtoWriter(DataSourceWriter):
+    """Batch write path (`df.write.format("deltaproto").save(path)`):
+    the DataSource two-phase commit mapped onto the Delta log.
 
-    def __init__(self, options: dict, schema: StructType):
+    - `write` (executors): each task lands its rows as ONE immutable
+      uuid-named parquet file — invisible until committed — and
+      reports the name.  A retried/speculative task lands a second
+      file, but only the message Spark keeps is committed; losers stay
+      unreferenced for `vacuum_delta`.
+    - `commit` (driver): ONE log version adding every reported file
+      with per-file stats, creating the table (protocol + metaData) on
+      the first commit; an overwrite also removes the live set it read
+      and aborts on a racing commit, like `write_delta`'s overwrite.
+    - `abort`: unlinks every landed file.
+
+    Rows cross the Python boundary tuple-at-a-time, so bulk writes stay
+    on `deltaproto.write_delta`.  Unpartitioned, unmapped, unguarded
+    targets only — the Python path cannot land hive tuples, physical
+    names, or run CHECK/GENERATED validation, so it refuses rather
+    than land rows those tables would reject."""
+
+    operation = "WRITE"
+
+    def __init__(
+        self, options: dict, schema: StructType, overwrite: bool = False
+    ):
         path = options.get("path")
         if not path:
             raise ValueError("deltaproto requires a path")
         self.path = path
         self.schema = schema
-        self.app_id = options.get(
-            "txnappid", options.get("txnAppId", "deltastream-sink")
-        )
+        self.overwrite = overwrite
         if dp.delta_versions(path):
             meta, _live, _v = _fold_py(path)
             if meta.get("partitionColumns"):
                 raise ValueError(
-                    "format('deltaproto') streaming sink cannot write to "
-                    "a PARTITIONED table; use foreachBatch over "
-                    "deltaproto.write_delta (which lands hive tuples)"
+                    "format('deltaproto') cannot write to a PARTITIONED "
+                    "table; use deltaproto.write_delta or "
+                    "delta_stream_sink (which land hive tuples)"
                 )
             if dp._column_mapping(meta):
                 raise ValueError(
                     "writing to a column-mapped Delta table is unsupported"
                 )
-            # the sink lands rows in Python workers and cannot run the
-            # write-time validations write_delta enforces — refuse
-            # rather than land unvalidated rows on a guarded table
-            # (checked before the schema comparison: a guarded table
-            # refuses regardless of what schema the stream brings)
+            # checked before the schema comparison: a guarded table
+            # refuses regardless of what schema the frame brings
             if any(
                 k.startswith("delta.constraints.")
                 for k in (meta.get("configuration") or {})
             ):
                 raise ValueError(
-                    "the target table has CHECK constraints — the "
-                    "streaming sink cannot validate them; use "
-                    "foreachBatch over deltaproto.write_delta"
+                    "the target table has CHECK constraints — "
+                    "format('deltaproto') cannot validate them; use "
+                    "deltaproto.write_delta"
                 )
             if dp._generation_exprs(meta):
                 raise ValueError(
-                    "the target table has GENERATED columns — the "
-                    "streaming sink cannot compute/verify them; use "
-                    "foreachBatch over deltaproto.write_delta"
+                    "the target table has GENERATED columns — "
+                    "format('deltaproto') cannot compute/verify them; "
+                    "use deltaproto.write_delta"
                 )
+            dp._check_writer(
+                dp._current_protocol(path),
+                meta,
+                "overwrite" if overwrite else "append",
+            )
             existing = json.loads(meta["schemaString"])
             ours = json.loads(self.schema.json())
             if existing != ours:
                 raise ValueError(
-                    "stream schema differs from the table's schemaString"
+                    "frame schema differs from the table's schemaString"
                 )
 
     def write(self, rows) -> _DeltaWriteMessage:
@@ -689,28 +733,18 @@ class DeltaProtoStreamWriter(DataSourceStreamWriter):
         pq.write_table(table, os.path.join(self.path, name))
         return _DeltaWriteMessage(file_name=name, n_rows=len(tuples))
 
-    def commit(self, messages, batchId: int) -> None:
-        import time as _time
+    def _lines(self, files: list[str], params: dict, now_ms: int) -> list[str]:
+        """commitInfo, protocol + metaData on a new table, and one add
+        (with stats) per landed file."""
+        import uuid as _uuid
 
-        files = sorted(m.file_name for m in messages if m and m.file_name)
-        committed = _txn_versions_py(self.path).get(self.app_id, -1)
-        if committed >= int(batchId):
-            for f in files:  # replay: exactly-once no-op
-                full = os.path.join(self.path, f)
-                if os.path.exists(full):
-                    os.unlink(full)
-            return
-        now_ms = int(_time.time() * 1000)
         lines = [
             json.dumps(
                 {
                     "commitInfo": {
                         "timestamp": now_ms,
-                        "operation": "STREAMING UPDATE",
-                        "operationParameters": {
-                            "outputMode": "Append",
-                            "epochId": int(batchId),
-                        },
+                        "operation": self.operation,
+                        "operationParameters": params,
                         "engineInfo": "sparkgraft-deltastream/1.0",
                     }
                 }
@@ -722,7 +756,7 @@ class DeltaProtoStreamWriter(DataSourceStreamWriter):
                 json.dumps(
                     {
                         "metaData": {
-                            "id": str(__import__("uuid").uuid4()),
+                            "id": str(_uuid.uuid4()),
                             "format": {"provider": "parquet", "options": {}},
                             "schemaString": self.schema.json(),
                             "partitionColumns": [],
@@ -745,6 +779,67 @@ class DeltaProtoStreamWriter(DataSourceStreamWriter):
             if stats is not None:
                 add["stats"] = stats
             lines.append(json.dumps({"add": add}))
+        return lines
+
+    def commit(self, messages) -> None:
+        import time as _time
+
+        files = sorted(m.file_name for m in messages if m and m.file_name)
+        now_ms = int(_time.time() * 1000)
+        mode = "Overwrite" if self.overwrite else "Append"
+        lines = self._lines(files, {"mode": mode}, now_ms)
+        if not self.overwrite or not dp.delta_versions(self.path):
+            dp._claim_delta_version(self.path, lines)
+            return
+        _meta, live, read_v = _fold_py(self.path)
+        for f in sorted(live):
+            rm = dp._remove_action(live[f], now_ms, True)
+            lines.append(json.dumps({"remove": rm}))
+        dp._claim_delta_version(
+            self.path, lines, read_version=read_v, read_scope="table"
+        )
+
+    def abort(self, messages) -> None:
+        for m in messages:
+            if m is not None and m.file_name:
+                full = os.path.join(self.path, m.file_name)
+                if os.path.exists(full):
+                    os.unlink(full)
+
+
+class DeltaProtoStreamWriter(DeltaProtoWriter, DataSourceStreamWriter):
+    """Streaming sink (`df.writeStream.format("deltaproto")`): the
+    engine's at-least-once micro-batch replay becomes exactly-once via
+    the Delta spec's `txn` action — each commit carries
+    (appId, version=batchId) and a replayed batch whose id is not
+    newer than the appId's committed txn state commits NOTHING (its
+    just-landed files stay unreferenced, `vacuum_delta` fodder).
+    Tasks land files exactly like the batch writer, with its target
+    checks; `commit` claims one log version per micro-batch."""
+
+    operation = "STREAMING UPDATE"
+
+    def __init__(self, options: dict, schema: StructType):
+        super().__init__(options, schema)
+        self.app_id = options.get(
+            "txnappid", options.get("txnAppId", "deltastream-sink")
+        )
+
+    def commit(self, messages, batchId: int) -> None:
+        import time as _time
+
+        files = sorted(m.file_name for m in messages if m and m.file_name)
+        committed = _txn_versions_py(self.path).get(self.app_id, -1)
+        if committed >= int(batchId):
+            for f in files:  # replay: exactly-once no-op
+                full = os.path.join(self.path, f)
+                if os.path.exists(full):
+                    os.unlink(full)
+            return
+        now_ms = int(_time.time() * 1000)
+        lines = self._lines(
+            files, {"outputMode": "Append", "epochId": int(batchId)}, now_ms
+        )
         lines.append(
             json.dumps(
                 {
@@ -759,11 +854,52 @@ class DeltaProtoStreamWriter(DataSourceStreamWriter):
         dp._claim_delta_version(self.path, lines)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and m.file_name:
-                full = os.path.join(self.path, m.file_name)
-                if os.path.exists(full):
-                    os.unlink(full)
+        DeltaProtoWriter.abort(self, messages)
+
+
+def delta_stream_sink(
+    stream,
+    path: str,
+    timeout_s: int = 300,
+    auto_compact_files: int | None = None,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Drain a stream into a Delta table with Trigger.AvailableNow
+    through foreachBatch over `deltaproto.write_delta` — so
+    partitioned, CHECK-constrained and generated-column targets work —
+    one exactly-once commit per micro-batch keyed by the spec's `txn`
+    action.  With `auto_compact_files=N`, runs `maybe_compact_delta`
+    once after the drain (post-drain, not per-batch: a rewrite per
+    trigger would be O(table) work per micro-batch).
+
+    The streaming checkpoint PERSISTS next to the table (default
+    `<path>/_stream_checkpoint`), and the txn appId is that checkpoint's
+    location: Delta's (txnAppId, txnVersion) rule is only sound while
+    batch ids are MONOTONIC for the appId, which holds for one
+    checkpoint ↔ one query.  The engine replays only unfinished batches
+    and gives new data fresh ids; the log-side txn check is crash-replay
+    dedup.  Pass `checkpoint_dir` to drain a DIFFERENT source into the
+    same table — it gets its own appId."""
+    if checkpoint_dir is None:
+        checkpoint_dir = os.path.join(path, "_stream_checkpoint")
+    app_id = f"delta_stream_sink:{os.path.abspath(checkpoint_dir)}"
+
+    def write_batch(batch_df, batch_id: int) -> None:
+        dp.write_delta(batch_df, path, txn=(app_id, batch_id))
+
+    q = (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"delta stream sink drain exceeded {timeout_s}s")
+    if auto_compact_files is not None and dp.delta_versions(path):
+        dp.maybe_compact_delta(
+            stream.sparkSession, path, max_live_files=auto_compact_files
+        )
 
 
 def _txn_versions_py(path: str) -> dict[str, int]:
@@ -829,6 +965,9 @@ class DeltaProtoDataSource(DataSource):
 
     def simpleStreamReader(self, schema: StructType) -> DeltaProtoStreamReader:
         return DeltaProtoStreamReader(self.options, schema)
+
+    def writer(self, schema: StructType, overwrite: bool) -> DeltaProtoWriter:
+        return DeltaProtoWriter(self.options, schema, overwrite)
 
     def streamWriter(
         self, schema: StructType, overwrite: bool

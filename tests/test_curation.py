@@ -249,11 +249,20 @@ def test_bm25_ranking_laws(spark, sf_correct):
     assert all(d in dup_ids for d in head)
 
 
-def test_bm25_custom_query_and_empty_result(spark, sf_dir):
+def test_bm25_custom_query_and_empty_result(spark, sf_dir, tmp_path):
     none = retrieval.bm25_search(spark, sf_dir, query=["zzzznotaterm"])
     assert none.count() == 0
     some = retrieval.bm25_search(spark, sf_dir, query=["spark"], top=5)
     assert some.count() == 5
+    # an empty corpus (avgdl is NULL) answers with an empty frame of
+    # the declared columns, not a TypeError while building the query
+    empty_dir = str(tmp_path / "empty_corpus")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0).write.parquet(
+        f"{empty_dir}/documents.parquet"
+    )
+    empty = retrieval.bm25_search(spark, empty_dir)
+    assert empty.columns == ["rank", "doc_id", "score"]
+    assert empty.count() == 0
 
 
 # --------------------------------------------------------------------------

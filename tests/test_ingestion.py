@@ -4,6 +4,7 @@ Pharma_Ingestion_Cleaning.py flow)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -14,6 +15,9 @@ from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_dat
     flatten_and_extract,
     price_stats,
     run_ingestion,
+)
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+    deltaproto as dp,
 )
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.json_ingest import (
     read_letter_keyed_json,
@@ -360,6 +364,41 @@ def test_nested_fields_align_by_name_not_position(spark, landing):
     assert r["class"].pharmacological == "analgesic-ph"
 
 
+def test_letter_with_all_null_refundable_flattens(spark, tmp_path):
+    """A letter whose records all carry `refundable: null` infers a
+    different array element type than its neighbours; the flatten must
+    align both to the declared record type instead of failing `stack`
+    with DATATYPE_MISMATCH, and keep the NULLs (NULL refundable is the
+    paper's 'not covered' state, not a value to coerce).  A letter whose
+    nested `lab` is NULL everywhere (inferred as a string, not a
+    struct) aligns too."""
+    no_lab = {**_med("CLAMOXYL", "-", "antibiotic", "620 DA", True), "lab": None}
+    doc = {
+        "A": [
+            _med("ASPIRINE", "LabA", "analgesic", "120 DA", True),
+            _med("AMOXIL", "LabA", "antibiotic", "450 DA", False),
+        ],
+        "B": [
+            _med("BRUFEN", "LabB", "analgesic", "85 DA", None),
+            _med("BACTRIM", "LabB", "antibiotic", "60 DA", None),
+        ],
+        "C": [no_lab],
+    }
+    raw = read_letter_keyed_json(spark, land_dict(doc, str(tmp_path / "m.json")))
+    got = {
+        r["name"]: (r["first_letter"], r["refundable"], r.lab.name)
+        for r in raw.collect()
+    }
+    assert got == {
+        "ASPIRINE": ("A", True, "LabA"),
+        "AMOXIL": ("A", False, "LabA"),
+        "BRUFEN": ("B", None, "LabB"),
+        "BACTRIM": ("B", None, "LabB"),
+        "CLAMOXYL": ("C", True, None),
+    }
+    assert raw.schema["refundable"].dataType.simpleString() == "boolean"
+
+
 # --------------------------------------------------------------------------
 # Spark 4 Python DataSource (sources/pydatasource.py)
 # --------------------------------------------------------------------------
@@ -632,166 +671,162 @@ def test_datasource_append_does_not_clobber_prior_parts(
     assert back.count() == 2 * df.count()
 
 
-def test_minilake_commit_log_lifecycle(spark, tmp_path):
-    """The log-structured table format: append accumulates, overwrite
-    replaces, EVERY prior version stays readable (time travel across
-    overwrite AND compaction), a crashed writer's orphan files are
-    invisible and vacuumed, and vacuum(0) keeps only the current
-    snapshot readable."""
-    import os
+def _delta_live(spark, path):
+    return dp._fold_delta_state(spark, path, None)[1]
 
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
+
+def _box_reads(spark, path, box):
+    """Files a conjunctive box predicate must read: those whose
+    add-action stats do not rule out every column's range."""
+    return sum(
+        1
+        for add in _delta_live(spark, path).values()
+        if not any(
+            dp._add_outside_range(add, [], c, lo, hi)
+            for c, (lo, hi) in box.items()
+        )
     )
 
+
+def test_minilake_commit_log_lifecycle(spark, tmp_path):
+    """The Delta log lifecycle: append accumulates, overwrite replaces,
+    EVERY prior version stays readable (time travel across overwrite
+    AND compaction), a crashed writer's orphan files are invisible and
+    vacuumed, and vacuum(0) keeps only the current snapshot readable."""
     path = str(tmp_path / "lake")
     df1 = spark.range(100).withColumn("v", F.col("id") * 2)
     df2 = spark.range(100, 150).withColumn("v", F.col("id") * 2)
 
-    v0 = minilake.commit_append(df1.repartition(4), path)
-    v1 = minilake.commit_append(df2.repartition(2), path)
+    v0 = dp.write_delta(df1.repartition(4), path)
+    v1 = dp.write_delta(df2.repartition(2), path)
     assert (v0, v1) == (0, 1)
-    assert minilake.read_snapshot(spark, path).count() == 150
-    assert minilake.read_snapshot(spark, path, version=0).count() == 100
+    assert dp.read_delta(spark, path).count() == 150
+    assert dp.read_delta(spark, path, version=0).count() == 100
 
     # overwrite: new snapshot, old still travelable
     df3 = spark.range(7).withColumn("v", F.lit(0).cast("long"))
-    v2 = minilake.commit_overwrite(df3, path)
-    assert minilake.read_snapshot(spark, path).count() == 7
-    assert minilake.read_snapshot(spark, path, version=v1).count() == 150
+    v2 = dp.write_delta(df3, path, mode="overwrite")
+    assert dp.read_delta(spark, path).count() == 7
+    assert dp.read_delta(spark, path, version=v1).count() == 150
 
-    # compaction: fewer files, same rows, pre-compaction versions intact
-    v3 = minilake.compact(spark, path, target_mb=512)
-    snap = minilake.read_snapshot(spark, path)
+    # compaction: same rows, pre-compaction versions intact
+    dp.compact_delta(spark, path, target_mb=512)
+    snap = dp.read_delta(spark, path)
     assert snap.count() == 7
-    assert minilake.read_snapshot(spark, path, version=v2).count() == 7
-    assert minilake.read_snapshot(spark, path, version=v1).count() == 150
-    assert [h["mode"] for h in minilake.history(path)] == [
-        "append", "append", "overwrite", "compact",
+    assert dp.read_delta(spark, path, version=v2).count() == 7
+    assert dp.read_delta(spark, path, version=v1).count() == 150
+    assert [h["operation"] for h in dp.delta_history(path)] == [
+        "WRITE", "WRITE", "WRITE", "OPTIMIZE",
     ]
 
     # crashed writer: data files landed, no commit → invisible
-    minilake._land_data_files(spark.range(999), path)
-    assert minilake.read_snapshot(spark, path).count() == 7
+    dp._land_parquet(spark.range(999), path, None)
+    assert dp.read_delta(spark, path).count() == 7
 
-    n_files_before = len(os.listdir(path + "/data"))
+    def n_data_files():
+        return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
+
+    n_files_before = n_data_files()
     # min_age_s=0: the test's 'orphans' are seconds old; production
     # default spares young files for in-flight writers
-    deleted = minilake.vacuum(path, retain_versions=0, min_age_s=0)
+    deleted = dp.vacuum_delta(spark, path, retain_versions=0, min_age_s=0)
     assert deleted > 0
-    assert len(os.listdir(path + "/data")) == n_files_before - deleted
+    assert n_data_files() == n_files_before - deleted
     # current snapshot survives vacuum; history before it is gone
-    assert minilake.read_snapshot(spark, path).count() == 7
     assert sorted(map(tuple, snap.collect())) == sorted(
-        map(tuple, minilake.read_snapshot(spark, path).collect())
+        map(tuple, dp.read_delta(spark, path).collect())
     )
 
 
 def test_minilake_empty_and_version_claim(spark, tmp_path):
     """Empty overwrite keeps the schema readable; version claims are
     strictly sequential even when a stale temp commit file lingers."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
     path = str(tmp_path / "lake2")
     df = spark.range(5).withColumn("v", F.col("id") + 1)
-    minilake.commit_append(df, path)
-    minilake.commit_overwrite(df.limit(0), path)
-    empty = minilake.read_snapshot(spark, path)
+    dp.write_delta(df, path)
+    # a crashed committer's temp file is never mistaken for a version
+    open(
+        os.path.join(path, "_delta_log", "_commit-stale.json.tmp"), "w"
+    ).close()
+    dp.write_delta(df.limit(0), path, mode="overwrite")
+    empty = dp.read_delta(spark, path)
     assert empty.count() == 0
     # names + types survive the log round-trip (nullability is not
     # preserved by parquet reads either, so it is not part of the law)
     assert [(f.name, f.dataType) for f in empty.schema.fields] == [
         (f.name, f.dataType) for f in df.schema.fields
     ]
-    assert minilake.read_snapshot(spark, path, version=0).count() == 5
-    assert minilake.versions(path) == [0, 1]
+    assert dp.read_delta(spark, path, version=0).count() == 5
+    assert dp.delta_versions(path) == [0, 1]
 
 
 def test_minilake_schema_enforcement_and_evolution(spark, tmp_path):
-    """Write-time schema contract: missing columns and type changes are
-    rejected loudly; new columns require allow_evolution=True and read
-    back as NULL for pre-evolution files (merged snapshot schema)."""
-    import pytest
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
+    """Write-time schema contract: type changes are rejected loudly; new
+    columns require merge_schema=True and read back as NULL for
+    pre-evolution files; an append that omits a column fills it with
+    NULL (delta-spark's rule)."""
     path = str(tmp_path / "lake3")
     base = spark.range(10).withColumn("v", F.col("id") * 2)
-    minilake.commit_append(base, path)
+    dp.write_delta(base, path)
 
-    with pytest.raises(ValueError, match="missing table columns"):
-        minilake.commit_append(base.drop("v"), path)
-    with pytest.raises(ValueError, match="changes column types"):
-        minilake.commit_append(
-            base.withColumn("v", F.col("v").cast("string")), path
-        )
+    with pytest.raises(ValueError, match="table schema says bigint"):
+        dp.write_delta(base.withColumn("v", F.col("v").cast("string")), path)
     evolved = base.withColumn("lang", F.lit("en"))
-    with pytest.raises(ValueError, match="allow_evolution"):
-        minilake.commit_append(evolved, path)
+    with pytest.raises(ValueError, match="merge_schema=True"):
+        dp.write_delta(evolved, path)
 
-    minilake.commit_append(evolved, path, allow_evolution=True)
-    snap = minilake.read_snapshot(spark, path)
+    dp.write_delta(evolved, path, merge_schema=True)
+    snap = dp.read_delta(spark, path)
     assert set(snap.columns) == {"id", "v", "lang"}
     assert snap.count() == 20
     assert snap.filter(F.col("lang").isNull()).count() == 10  # old files
+    dp.write_delta(base.drop("v"), path)
+    assert dp.read_delta(spark, path).filter(F.col("v").isNull()).count() == 10
 
 
 def test_minilake_zone_maps_skip_files_and_prune_merge(spark, tmp_path):
-    """Zone maps from parquet footers land in the commit log; a
+    """Per-file stats from parquet footers land in the add actions; a
     selective range scan reads ONLY overlapping files (skip count
     proves it, using the log alone); MERGE rewrites only the files
     whose key range can contain an update — untouched files keep their
     exact names in the log — and produces upsert-correct rows."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
     path = str(tmp_path / "zoned")
     # 4 files with disjoint id ranges via range-partitioned write
     df = spark.range(1000).withColumn("v", F.col("id") * 10)
-    minilake.commit_append(
-        df.repartitionByRange(4, "id"), path, stat_cols=["id"]
-    )
-    zones = minilake._live_zones(path)
-    assert len(zones) == 4 and all(
-        z and "id" in z["stats"] for z in zones.values()
+    dp.write_delta(df.repartitionByRange(4, "id"), path)
+    live = _delta_live(spark, path)
+    assert len(live) == 4 and all(
+        "id" in json.loads(a["stats"])["minValues"] for a in live.values()
     )
 
-    pruned, n_read, n_skipped = minilake.scan_pruned(spark, path, "id", 10, 20)
+    pruned, n_read, n_skipped = dp.read_delta_pruned(spark, path, "id", 10, 20)
     assert n_read == 1 and n_skipped == 3
     assert pruned.count() == 11
     assert pruned.agg(F.min("id"), F.max("id")).first() == (10, 20)
 
     # merge touching only the low range: 3 files survive untouched
-    before = set(minilake._live_files(path))
+    before = set(live)
     updates = spark.range(5).withColumn("v", F.lit(-1).cast("long"))
-    minilake.merge_upsert_lake(spark, updates, path, "id")
-    after = set(minilake._live_files(path))
+    dp.merge_upsert_delta(spark, updates, path, "id")
+    after = set(_delta_live(spark, path))
     assert len(before & after) == 3  # untouched files carried by name
-    snap = minilake.read_snapshot(spark, path)
+    snap = dp.read_delta(spark, path)
     assert snap.count() == 1000
     assert snap.filter(F.col("v") == -1).count() == 5
     assert snap.filter((F.col("id") < 5) & (F.col("v") != -1)).count() == 0
-    # merge commit carries zone maps too → skipping still works
-    _, n_read2, n_skipped2 = minilake.scan_pruned(spark, path, "id", 900, 950)
+    # merge commit carries stats too → skipping still works
+    _, n_read2, n_skipped2 = dp.read_delta_pruned(spark, path, "id", 900, 950)
     assert n_read2 == 1 and n_skipped2 >= 3
 
 
 def test_minilake_zorder_layout_skips_in_both_dimensions(spark, tmp_path):
-    """Layout × zone maps: a LINEAR sort gives tight zones on its sort
-    column only (box predicate on the other column skips nothing); the
-    Z-ORDER layout gives usably tight zones on BOTH, so the same 2-D
-    box skips most files — the OPTIMIZE ZORDER BY payoff, measured
-    from the commit log alone."""
+    """Layout × stats: a LINEAR sort gives tight stats on its sort
+    column only (a predicate on the other column skips nothing); the
+    Z-ORDER layout gives usably tight stats on BOTH, so the same
+    predicate skips most files — the OPTIMIZE ZORDER BY payoff,
+    measured from the log alone."""
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.functions.scale import (
         zorder_key_2d,
-    )
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
     )
 
     n, files = 4096, 16
@@ -800,168 +835,139 @@ def test_minilake_zorder_layout_skips_in_both_dimensions(spark, tmp_path):
         .withColumn("x", F.col("id") % 1000)
         .withColumn("y", F.pmod(F.xxhash64("id"), F.lit(1000)))
     )
-    ybox = {"y": (0, 99)}  # selective on the NON-sort column
 
     linear = str(tmp_path / "linear")
-    minilake.commit_append(
-        base.repartitionByRange(files, "x"), linear, stat_cols=["x", "y"]
-    )
-    lin_df, lin_read, lin_skip = minilake.scan_pruned_multi(
-        spark, linear, ybox
-    )
+    dp.write_delta(base.repartitionByRange(files, "x"), linear)
+    lin_df, lin_read, lin_skip = dp.read_delta_pruned(spark, linear, "y", 0, 99)
 
     zord = str(tmp_path / "zord")
     zkey = zorder_key_2d(F.col("x"), F.col("y"), 0, 1000, 0, 1000)
-    minilake.commit_append(
+    dp.write_delta(
         base.withColumn("z", zkey).repartitionByRange(files, "z").drop("z"),
         zord,
-        stat_cols=["x", "y"],
     )
-    z_df, z_read, z_skip = minilake.scan_pruned_multi(spark, zord, ybox)
+    z_df, z_read, z_skip = dp.read_delta_pruned(spark, zord, "y", 0, 99)
 
     # identical answers, very different file counts
     assert sorted(map(tuple, lin_df.collect())) == sorted(map(tuple, z_df.collect()))
     assert lin_skip + lin_read == z_skip + z_read == files
-    # linear-by-x: y is unclustered → every file's y-zone spans the
+    # linear-by-x: y is unclustered → every file's y-range spans the
     # predicate → zero skipping.  z-order: y participates in the key →
-    # most files' y-zones miss the 10% band.
+    # most files' y-ranges miss the 10% band.
     assert lin_skip == 0
     assert z_skip > files // 2
     # and the 2-D box stays cheap on the z layout
-    _, z2_read, _ = minilake.scan_pruned_multi(
-        spark, zord, {"x": (0, 99), "y": (0, 99)}
-    )
-    assert z2_read <= files // 2
+    assert _box_reads(spark, zord, {"x": (0, 99), "y": (0, 99)}) <= files // 2
 
 
 def test_minilake_checkpoint_bounds_log_replay(spark, tmp_path, monkeypatch):
-    """Delta's checkpoint rule: every N commits the folded state is
-    written next to the log, and readers fold checkpoint + tail instead
-    of replaying from version 0 — snapshot-construction cost is O(tail),
-    not O(history).  Correctness is unchanged for current reads, time
-    travel BEFORE the checkpoint, and torn checkpoint files."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    monkeypatch.setattr(minilake, "_CHECKPOINT_EVERY", 5)
+    """Delta's checkpoint rule (`delta.checkpointInterval`): every N
+    commits the folded state is written next to the log, and readers
+    fold checkpoint + tail instead of replaying from version 0 —
+    snapshot-construction cost is O(tail), not O(history).  Correctness
+    is unchanged for current reads, time travel BEFORE the checkpoint,
+    and a torn `_last_checkpoint` hint."""
     path = str(tmp_path / "ck_lake")
-    for i in range(12):
-        minilake.commit_append(
-            spark.range(i * 10, (i + 1) * 10).withColumn("v", F.col("id") % 3),
-            path,
-        )
 
-    ld = os.path.join(path, "_log")
-    cks = sorted(f for f in os.listdir(ld) if f.endswith(".checkpoint.json"))
-    assert [int(f[:-16]) for f in cks] == [5, 10]
-    assert minilake.read_snapshot(spark, path).count() == 120
+    def batch(i):
+        return spark.range(i * 10, (i + 1) * 10).withColumn("v", F.col("id") % 3)
+
+    dp.write_delta(batch(0), path)  # v0
+    dp.set_delta_properties(spark, path, {"delta.checkpointInterval": "5"})
+    for i in range(1, 11):  # v2..v11
+        dp.write_delta(batch(i), path)
+
+    ld = os.path.join(path, "_delta_log")
+    cks = sorted(f for f in os.listdir(ld) if f.endswith(".checkpoint.parquet"))
+    assert [int(f.split(".")[0]) for f in cks] == [5, 10]
+    assert dp.read_delta(spark, path).count() == 110
 
     # a fresh fold reads ONLY the commits after the newest checkpoint
     seen = []
-    orig = minilake._read_commit
+    orig = dp._read_actions
 
     def counting(p, v):
         seen.append(v)
         return orig(p, v)
 
-    monkeypatch.setattr(minilake, "_read_commit", counting)
-    state = minilake._fold_state(path)
+    monkeypatch.setattr(dp, "_read_actions", counting)
+    live = set(_delta_live(spark, path))
     assert set(seen) == {11}
-    monkeypatch.setattr(minilake, "_read_commit", orig)
-
-    # the checkpointed fold equals a from-scratch fold
-    monkeypatch.setattr(minilake, "_latest_checkpoint", lambda *a, **k: None)
-    scratch = minilake._fold_state(path)
-    assert state["live"] == scratch["live"]
-    assert state["stream_batch_ids"] == scratch["stream_batch_ids"]
-    monkeypatch.undo()
-    monkeypatch.setattr(minilake, "_CHECKPOINT_EVERY", 5)
+    monkeypatch.setattr(dp, "_read_actions", orig)
 
     # time travel to a version before any checkpoint still folds right
-    assert minilake.read_snapshot(spark, path, version=3).count() == 40
+    assert dp.read_delta(spark, path, version=3).count() == 30
 
-    # a torn checkpoint is skipped, never fatal: readers fall back
-    torn = os.path.join(ld, minilake._CKPT_FMT.format(11))
-    with open(torn, "w") as f:
-        f.write('{"version": 11')  # truncated json
-    assert minilake._fold_state(path)["live"] == scratch["live"]
-    assert minilake.read_snapshot(spark, path).count() == 120
+    # a torn checkpoint hint is skipped, never fatal: readers fall back
+    with open(os.path.join(ld, "_last_checkpoint"), "w") as f:
+        f.write('{"version": 1')  # truncated json
+    assert set(_delta_live(spark, path)) == live
+    assert dp.read_delta(spark, path).count() == 110
 
 
-def test_minilake_checkpoint_carries_stream_ids(spark, tmp_path, monkeypatch):
-    """The exactly-once stream-batch id set survives checkpoint folding:
-    a replayed micro-batch is still a no-op when its commit is only
-    reachable through the checkpoint."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    monkeypatch.setattr(minilake, "_CHECKPOINT_EVERY", 5)
+def test_minilake_checkpoint_carries_stream_ids(spark, tmp_path):
+    """The exactly-once micro-batch state (`txn` actions) survives
+    checkpoint folding: a replayed batch is still a no-op when its
+    commit is only reachable through the checkpoint."""
     path = str(tmp_path / "ck_stream_lake")
     df = spark.range(4).withColumn("v", F.lit(1))
-    for b in range(6):
-        assert minilake.commit_stream_batch(df, path, b) is not None
+    dp.write_delta(df, path, txn=("stream", 0))
+    dp.set_delta_properties(spark, path, {"delta.checkpointInterval": "5"})
+    for b in range(1, 6):
+        dp.write_delta(df, path, txn=("stream", b))
     assert os.path.exists(
-        os.path.join(path, "_log", minilake._CKPT_FMT.format(5))
+        os.path.join(path, "_delta_log", dp._CKPT_FMT.format(5))
     )
-    assert minilake.committed_stream_batches(path) == set(range(6))
+    assert dp.delta_txn_versions(spark, path) == {"stream": 5}
     # batch 2's commit is inside the checkpointed prefix — replay no-ops
-    assert minilake.commit_stream_batch(df, path, 2) is None
-    assert minilake.read_snapshot(spark, path).count() == 24
+    v = dp.delta_versions(path)[-1]
+    assert dp.write_delta(df, path, txn=("stream", 2)) == v
+    assert dp.read_delta(spark, path).count() == 24
 
 
 def test_minilake_delete_where_prunes_files(spark, tmp_path):
-    """File-pruned DELETE: only files whose key zone can contain the
+    """Stats-pruned DELETE: only files whose id range can contain the
     predicate are rewritten; the rest keep their names in the log.  The
-    pre-delete snapshot stays time-travelable, incremental readers are
-    told to re-sync, and a rewrite that comes back empty commits no
-    zero-row parquet."""
-    import pytest
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
+    pre-delete snapshot stays time-travelable, the commit's change
+    feed holds exactly the deleted rows, and a delete of every row
+    leaves no live row behind."""
     path = str(tmp_path / "del_lake")
     base = spark.range(1000).withColumn("v", F.col("id") % 7)
-    minilake.commit_append(
-        base.repartitionByRange(10, "id"), path, stat_cols=["id"]
-    )
-    before = minilake._live_files(path)
+    dp.write_delta(base.repartitionByRange(10, "id"), path)
+    before = set(_delta_live(spark, path))
 
-    minilake.delete_where(spark, path, "id", 100, 199)
-    after = minilake._live_files(path)
-    # zone maps proved most files untouched — byte-identical, same names
+    dp.delete_where_delta(spark, path, "id", 100, 199)
+    after = set(_delta_live(spark, path))
+    # stats proved most files untouched — byte-identical, same names
     assert len(before & after) >= 7
-    snap = minilake.read_snapshot(spark, path)
+    snap = dp.read_delta(spark, path)
     assert snap.count() == 900
     assert snap.filter(F.col("id").between(100, 199)).count() == 0
     # pre-delete snapshot still readable until vacuum
-    assert minilake.read_snapshot(spark, path, version=0).count() == 1000
-    # a delete is not an append: incremental consumers must re-sync
-    with pytest.raises(ValueError, match="re-sync"):
-        minilake.read_changes(spark, path, since_version=0)
+    assert dp.read_delta(spark, path, version=0).count() == 1000
+    feed = dp.read_changes_delta(spark, path, since_version=1)
+    assert {r["_change_type"] for r in feed.collect()} == {"delete"}
+    assert sorted(r["id"] for r in feed.collect()) == list(range(100, 200))
 
-    # deleting every remaining row commits add=[] (no zero-row files)
-    v = minilake.delete_where(spark, path, "id", -1, 2000)
-    h = minilake.history(path)[-1]
-    assert h["mode"] == "delete" and h["n_added"] == 0 and h["version"] == v
-    assert minilake.read_snapshot(spark, path).count() == 0
+    # deleting every remaining row: the live set holds no records
+    v = dp.delete_where_delta(spark, path, "id", -1, 2000)
+    h = dp.delta_history(path)[-1]
+    assert h["operation"] == "DELETE" and h["version"] == v
+    assert sum(
+        json.loads(a["stats"])["numRecords"]
+        for a in _delta_live(spark, path).values()
+    ) == 0
+    assert dp.read_delta(spark, path).count() == 0
 
-    # predicate outside every zone: provable no-op, version unchanged
-    assert minilake.delete_where(spark, path, "id", 5000, 6000) == v
+    # predicate outside every file: provable no-op, version unchanged
+    assert dp.delete_where_delta(spark, path, "id", 5000, 6000) == v
 
 
 def test_minilake_optimize_zorder_upgrades_layout_in_place(spark, tmp_path):
     """OPTIMIZE ZORDER BY as a commit: a table appended linear-by-x
     (y unclustered → zero y-skipping) is rewritten along the Morton
-    curve in place — the same 2-D box scan then skips most files, rows
+    curve in place — the same y predicate then skips most files, rows
     are unchanged, and the pre-optimize version stays travelable."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
     path = str(tmp_path / "zopt_lake")
     files = 16
     base = (
@@ -970,125 +976,112 @@ def test_minilake_optimize_zorder_upgrades_layout_in_place(spark, tmp_path):
         .withColumn("y", F.pmod(F.xxhash64("id"), F.lit(1000)).cast("double"))
         .drop("id")
     )
-    minilake.commit_append(
-        base.repartitionByRange(files, "x"), path, stat_cols=["x", "y"]
-    )
-    ybox = {"y": (0.0, 99.0)}
-    lin_df, lin_read, lin_skip = minilake.scan_pruned_multi(spark, path, ybox)
+    dp.write_delta(base.repartitionByRange(files, "x"), path)
+    lin_df, lin_read, lin_skip = dp.read_delta_pruned(spark, path, "y", 0.0, 99.0)
     assert lin_skip == 0  # linear-by-x: every file spans all of y
 
-    v = minilake.optimize_zorder(spark, path, "x", "y", n_files=files)
-    z_df, z_read, z_skip = minilake.scan_pruned_multi(spark, path, ybox)
+    v = dp.optimize_zorder_delta(spark, path, "x", "y", n_files=files)
+    z_df, z_read, z_skip = dp.read_delta_pruned(spark, path, "y", 0.0, 99.0)
     assert z_skip > files // 2
     assert sorted(map(tuple, lin_df.collect())) == sorted(
         map(tuple, z_df.collect())
     )
-    assert minilake.read_snapshot(spark, path).count() == 4000
-    assert minilake.read_snapshot(spark, path, version=v - 1).count() == 4000
+    assert dp.read_delta(spark, path).count() == 4000
+    assert dp.read_delta(spark, path, version=v - 1).count() == 4000
     assert z_read + z_skip == files
-    assert minilake.history(path)[-1]["mode"] == "optimize"
+    assert dp.delta_history(path)[-1]["operation"] == "OPTIMIZE"
 
     # 2-D box on the z layout touches a minority of files
-    _, box_read, _ = minilake.scan_pruned_multi(
-        spark, path, {"x": (0.0, 99.0), "y": (0.0, 99.0)}
+    assert (
+        _box_reads(spark, path, {"x": (0.0, 99.0), "y": (0.0, 99.0)})
+        <= files // 2
     )
-    assert box_read <= files // 2
 
 
 def test_minilake_optimize_zorder_aborts_on_concurrent_commit(
     spark, tmp_path, monkeypatch
 ):
-    """A commit that lands between OPTIMIZE's snapshot read and its
-    claim must abort the rewrite (never silently drop the concurrent
-    rows) and leave no orphan files in the log."""
-    import pytest
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
+    """A rewrite that lands between OPTIMIZE's snapshot read and its
+    claim must abort the optimize (never silently drop the concurrent
+    change) — the racing delete survives and optimize commits nothing."""
     path = str(tmp_path / "zrace_lake")
     df = spark.range(100).withColumn("x", F.col("id").cast("double")).withColumn(
         "y", F.col("id").cast("double")
     ).drop("id")
-    minilake.commit_append(df, path, stat_cols=["x", "y"])
+    dp.write_delta(df, path)
 
-    orig_land = minilake._land_data_files
+    orig_land = dp._land_parquet
     raced = {"done": False}
 
     def land_then_race(frame, p, *args, **kwargs):
         out = orig_land(frame, p, *args, **kwargs)
         if not raced["done"]:
             raced["done"] = True
-            # a concurrent writer appends AFTER optimize read its snapshot
-            monkeypatch.setattr(minilake, "_land_data_files", orig_land)
-            minilake.commit_append(
-                spark.range(5).withColumn("x", F.lit(0.0)).withColumn(
-                    "y", F.lit(0.0)
-                ).drop("id"),
-                p,
-            )
+            # a concurrent writer deletes AFTER optimize read its snapshot
+            monkeypatch.setattr(dp, "_land_parquet", orig_land)
+            dp.delete_where_delta(spark, p, "x", 0.0, 4.0)
         return out
 
-    monkeypatch.setattr(minilake, "_land_data_files", land_then_race)
-    with pytest.raises(RuntimeError, match="lost a race"):
-        minilake.optimize_zorder(spark, path, "x", "y", n_files=4)
-    # the concurrent append survived; optimize committed nothing
-    assert minilake.read_snapshot(spark, path).count() == 105
-    assert [h["mode"] for h in minilake.history(path)] == ["append", "append"]
+    monkeypatch.setattr(dp, "_land_parquet", land_then_race)
+    with pytest.raises(dp.ConcurrentDeltaCommit, match="already rewrote"):
+        dp.optimize_zorder_delta(spark, path, "x", "y", n_files=4)
+    # the concurrent delete survived; optimize committed nothing
+    assert dp.read_delta(spark, path).count() == 95
+    assert [h["operation"] for h in dp.delta_history(path)] == [
+        "WRITE", "DELETE",
+    ]
 
 
 def test_minilake_restore_is_log_only_and_vacuum_aware(spark, tmp_path):
     """RESTORE TO VERSION: undoing an overwrite is a pure log commit —
-    no data files are written or moved, zone maps ride along for the
+    no data files are written or moved, stats ride along for the
     re-added files, the restore itself is travelable, and restoring to
     a vacuumed version fails loudly instead of returning a torn
     table."""
-    import pytest
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
     path = str(tmp_path / "restore_lake")
     df1 = spark.range(100).withColumn("v", F.col("id") * 2)
     df2 = spark.range(100, 140).withColumn("v", F.col("id") * 2)
-    minilake.commit_append(df1, path, stat_cols=["id"])
-    v1 = minilake.commit_append(df2, path, stat_cols=["id"])
-    minilake.commit_overwrite(spark.range(3).withColumn("v", F.lit(0).cast("long")), path)
-    assert minilake.read_snapshot(spark, path).count() == 3
+    dp.write_delta(df1, path)
+    v1 = dp.write_delta(df2, path)
+    dp.write_delta(
+        spark.range(3).withColumn("v", F.lit(0).cast("long")), path,
+        mode="overwrite",
+    )
+    assert dp.read_delta(spark, path).count() == 3
 
-    n_data_files = len(os.listdir(os.path.join(path, "data")))
-    rv = minilake.restore(path, v1)
+    def n_data_files():
+        return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
+
+    n_files = n_data_files()
+    rv = dp.restore_delta(spark, path, v1)
     # log-only: not a single data file added
-    assert len(os.listdir(os.path.join(path, "data"))) == n_data_files
-    assert minilake.read_snapshot(spark, path).count() == 140
-    assert minilake.history(path)[-1]["mode"] == "restore"
-    # zone maps survive the round trip: pruned scan still skips
-    _, n_read, n_skipped = minilake.scan_pruned(spark, path, "id", 0, 10)
+    assert n_data_files() == n_files
+    assert dp.read_delta(spark, path).count() == 140
+    assert dp.delta_history(path)[-1]["operation"] == "RESTORE"
+    # stats survive the round trip: pruned scan still skips
+    _, n_read, n_skipped = dp.read_delta_pruned(spark, path, "id", 0, 10)
     assert n_skipped > 0
     # the overwrite state is itself still travelable
-    assert minilake.read_snapshot(spark, path, version=rv - 1).count() == 3
+    assert dp.read_delta(spark, path, version=rv - 1).count() == 3
 
     # vacuum away history, then try to restore to it: loud failure
-    minilake.commit_overwrite(spark.range(5).withColumn("v", F.lit(1).cast("long")), path)
-    minilake.vacuum(path, retain_versions=0, min_age_s=0)
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        minilake.restore(path, v1)
-    assert minilake.read_snapshot(spark, path).count() == 5
+    dp.write_delta(
+        spark.range(5).withColumn("v", F.lit(1).cast("long")), path,
+        mode="overwrite",
+    )
+    dp.vacuum_delta(spark, path, retain_versions=0, min_age_s=0)
+    with pytest.raises(ValueError, match="vacuumed"):
+        dp.restore_delta(spark, path, v1)
+    assert dp.read_delta(spark, path).count() == 5
 
 
 def test_minilake_delete_where_keeps_nulls_and_nops_zero_match(spark, tmp_path):
-    """Review hardening: NULL-keyed rows survive a range delete (SQL
-    three-valued logic), a delete whose zones overlap but whose rows
-    don't is a commit-free no-op, the table schema keeps evolved
-    columns that live only in untouched files, and compact re-records
-    zone maps / empty optimize is a no-op."""
+    """NULL-keyed rows survive a range delete (SQL three-valued logic),
+    a delete whose stats overlap but whose rows don't is a commit-free
+    no-op, the table schema keeps evolved columns that live only in
+    untouched files, compaction re-records stats, and optimize on an
+    empty snapshot is a no-op."""
     from pyspark.sql import types as T
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
 
     path = str(tmp_path / "del2_lake")
     base = spark.createDataFrame(
@@ -1100,89 +1093,79 @@ def test_minilake_delete_where_keeps_nulls_and_nops_zero_match(spark, tmp_path):
             ]
         ),
     )
-    minilake.commit_append(base.coalesce(1), path, stat_cols=["k"])
+    dp.write_delta(base.coalesce(1), path)
 
-    # zones overlap [12, 18] (file k-range [10, 500]) but no row matches:
-    # commit-free no-op
-    v = minilake.delete_where(spark, path, "k", 12, 18)
-    assert v == minilake.versions(path)[-1]
-    assert len(minilake.versions(path)) == 1
-    assert minilake.read_snapshot(spark, path).count() == 4
+    # stats overlap [12, 18] (file k-range [10, 500]) but no row
+    # matches: the predicate path's candidate scan finds no file to
+    # rewrite, a commit-free no-op
+    v = dp.delete_predicate_delta(spark, path, "k BETWEEN 12 AND 18")
+    assert v == dp.delta_versions(path)[-1]
+    assert len(dp.delta_versions(path)) == 1
+    assert dp.read_delta(spark, path).count() == 4
 
     # NULL row survives a real delete over its file
-    minilake.delete_where(spark, path, "k", 0, 99)
-    rows = {r.s for r in minilake.read_snapshot(spark, path).collect()}
+    dp.delete_where_delta(spark, path, "k", 0, 99)
+    rows = {r.s for r in dp.read_delta(spark, path).collect()}
     assert rows == {"null-row", "far"}
 
     # schema keeps evolved column living only in an untouched file
     evolved = spark.createDataFrame(
         [(1000, "w-row", 7.5)], "k long, s string, w double"
     )
-    minilake.commit_append(evolved, path, allow_evolution=True, stat_cols=["k"])
-    minilake.delete_where(spark, path, "k", 400, 600)  # touches only 'far'
-    import json as _json
-
-    latest = minilake._read_commit(path, minilake.versions(path)[-1])
-    assert latest["mode"] == "delete"
-    names = [f["name"] for f in _json.loads(latest["schema"])["fields"]]
-    assert "w" in names
-    snap = minilake.read_snapshot(spark, path)
+    dp.write_delta(evolved, path, merge_schema=True)
+    dp.delete_where_delta(spark, path, "k", 400, 600)  # touches only 'far'
+    assert dp.delta_history(path)[-1]["operation"] == "DELETE"
+    meta, _l, _v = dp._fold_delta_state(spark, path, None)
+    assert "w" in [f["name"] for f in json.loads(meta["schemaString"])["fields"]]
+    snap = dp.read_delta(spark, path)
     assert {r.s for r in snap.collect()} == {"null-row", "w-row"}
 
-    # compact re-records zone maps for previously-stat'd columns
-    minilake.compact(spark, path, target_mb=512)
-    zones = minilake._live_zones(path)
-    assert zones and all(z and "k" in z["stats"] for z in zones.values())
-    assert {r.s for r in minilake.read_snapshot(spark, path).collect()} == {
+    # compact re-records stats for the key column
+    dp.compact_delta(spark, path, target_mb=512)
+    live = _delta_live(spark, path)
+    assert live and all(
+        "k" in json.loads(a["stats"])["minValues"] for a in live.values()
+    )
+    assert {r.s for r in dp.read_delta(spark, path).collect()} == {
         "null-row", "w-row",
     }
 
-    # delete everything, then optimize on the empty snapshot: clean no-op
-    minilake.delete_where(spark, path, "k", -10**9, 10**9)
+    # delete everything, then optimize on the empty snapshot: no-op
+    dp.delete_where_delta(spark, path, "k", -10**9, 10**9)
     # (NULL row survives even the full-range delete, per SQL semantics)
-    assert {r.s for r in minilake.read_snapshot(spark, path).collect()} == {
-        "null-row",
-    }
-    minilake.commit_overwrite(
-        minilake.read_snapshot(spark, path).limit(0), path
-    )
-    v_now = minilake.versions(path)[-1]
-    assert minilake.optimize_zorder(spark, path, "k", "k") == v_now
+    assert {r.s for r in dp.read_delta(spark, path).collect()} == {"null-row"}
+    dp.write_delta(dp.read_delta(spark, path).limit(0), path, mode="overwrite")
+    v_now = dp.delta_versions(path)[-1]
+    assert dp.optimize_zorder_delta(spark, path, "k", "k") == v_now
 
 
 def test_minilake_delete_where_aborts_on_concurrent_rewrite(
     spark, tmp_path, monkeypatch
 ):
-    """A compact that lands between delete_where's zone read and its
+    """A compact that lands between the delete's snapshot read and its
     claim must abort the delete — committing the stale remove list
     would resurrect deleted rows out of the compacted file."""
-    import pytest
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
     path = str(tmp_path / "del_race_lake")
     base = spark.range(100).withColumn("v", F.col("id") % 5)
-    minilake.commit_append(base.repartition(4), path, stat_cols=["id"])
+    dp.write_delta(base.repartition(4), path)
 
-    orig_land = minilake._land_data_files
+    orig_land = dp._land_parquet
     raced = {"done": False}
 
     def land_then_race(frame, p, *args, **kwargs):
         out = orig_land(frame, p, *args, **kwargs)
         if not raced["done"]:
             raced["done"] = True
-            monkeypatch.setattr(minilake, "_land_data_files", orig_land)
-            minilake.compact(spark, p, target_mb=512)
+            monkeypatch.setattr(dp, "_land_parquet", orig_land)
+            dp.compact_delta(spark, p, target_mb=512)
         return out
 
-    monkeypatch.setattr(minilake, "_land_data_files", land_then_race)
-    with pytest.raises(RuntimeError, match="lost a race"):
-        minilake.delete_where(spark, path, "id", 0, 49)
+    monkeypatch.setattr(dp, "_land_parquet", land_then_race)
+    with pytest.raises(dp.ConcurrentDeltaCommit, match="already rewrote"):
+        dp.delete_where_delta(spark, path, "id", 0, 49)
     # nothing deleted, compacted table intact
-    assert minilake.read_snapshot(spark, path).count() == 100
-    assert minilake.history(path)[-1]["mode"] == "compact"
+    assert dp.read_delta(spark, path).count() == 100
+    assert dp.delta_history(path)[-1]["operation"] == "OPTIMIZE"
 
 
 def test_minilake_concurrent_appends_all_win_distinct_versions(spark, tmp_path):
@@ -1192,25 +1175,25 @@ def test_minilake_concurrent_appends_all_win_distinct_versions(spark, tmp_path):
     and the final snapshot holds every writer's rows exactly once."""
     import concurrent.futures
 
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
     path = str(tmp_path / "conc_lake")
     n_writers = 8
 
-    def append(i: int) -> int:
-        df = spark.range(i * 100, (i + 1) * 100).withColumn(
+    def frame(i):
+        return spark.range(i * 100, (i + 1) * 100).withColumn(
             "writer", F.lit(i)
         )
-        return minilake.commit_append(df.coalesce(1), path)
+
+    dp.write_delta(frame(0).limit(0), path)  # create the table: v0
+
+    def append(i: int) -> int:
+        return dp.write_delta(frame(i).coalesce(1), path)
 
     with concurrent.futures.ThreadPoolExecutor(max_workers=n_writers) as ex:
         got = sorted(ex.map(append, range(n_writers)))
 
-    assert got == list(range(n_writers))  # distinct, gapless versions
-    assert minilake.versions(path) == got
-    snap = minilake.read_snapshot(spark, path)
+    assert got == list(range(1, n_writers + 1))  # distinct, gapless
+    assert dp.delta_versions(path) == [0] + got
+    snap = dp.read_delta(spark, path)
     assert snap.count() == n_writers * 100
     assert snap.select("id").distinct().count() == n_writers * 100
     per_writer = {
@@ -1222,21 +1205,24 @@ def test_minilake_concurrent_appends_all_win_distinct_versions(spark, tmp_path):
 
 def test_minilake_describe_detail_reads_only_the_log(spark, tmp_path, monkeypatch):
     """DESCRIBE DETAIL reports the operational vitals (files, bytes,
-    versions, checkpoint, stream batches) from the log alone."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    monkeypatch.setattr(minilake, "_CHECKPOINT_EVERY", 2)
+    partitioning, protocol) from the log alone — no data file is
+    opened."""
     path = str(tmp_path / "detail_lake")
     df = spark.range(50).withColumn("v", F.col("id"))
-    minilake.commit_append(df.coalesce(1), path)
-    minilake.commit_append(df.coalesce(1), path)
-    minilake.commit_stream_batch(df.coalesce(1), path, 0)
+    dp.write_delta(df.coalesce(1), path)
+    dp.write_delta(df.coalesce(1), path)
+    dp.write_delta(df.coalesce(1), path, txn=("stream", 0))
 
-    d = minilake.describe_detail(path)
-    assert d["version"] == 2 and d["num_commits"] == 3
-    assert d["checkpoint_version"] == 2
-    assert d["num_live_files"] == 3 and d["size_bytes"] > 0
-    assert d["num_stream_batches"] == 1
-    assert '"v"' in d["schema"]
+    # reading a parquet footer or row would go through pyarrow/Spark
+    import pyarrow.parquet as pq
+
+    def no_io(*a, **k):
+        raise AssertionError("DESCRIBE DETAIL opened a data file")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_io)
+    d = dp.read_delta_meta(spark, path, "detail").first()
+    assert d["numFiles"] == 3 and d["sizeInBytes"] > 0
+    assert d["partitionColumns"] == "[]"
+    assert d["minReaderVersion"] == 1
+    assert dp.delta_versions(path)[-1] == 2
+    assert dp.delta_txn_versions(spark, path) == {"stream": 0}

@@ -1,24 +1,28 @@
-"""Change-data-feed across rewrites (minilake.read_changes):
+"""Change-data-feed across rewrites on the Delta log
+(deltaproto.read_changes_delta and the format('deltaproto') stream):
 
-- plain row feed and the format('minilake') stream source SKIP pure
-  rewrites (compact/optimize) — routine maintenance no longer breaks
+- the feed and the stream source SKIP pure rewrites (compact /
+  optimize, `dataChange: false`) — routine maintenance never breaks
   incremental consumers;
-- change_feed=True emits exact insert/delete rows for append, DELETE
-  (via the commit's recorded predicate), RESTORE, and OVERWRITE —
-  verified by APPLYING the feed and comparing with the real snapshot;
-- MERGE commits still raise (not row-splittable from the log).
+- the feed emits exact insert/delete rows for append, DELETE (the
+  commit's `cdc` file), OVERWRITE and RESTORE — verified by APPLYING
+  the feed and comparing with the real snapshot;
+- MERGE commits feed row-level pre/post images; a rewrite commit
+  without `cdc` actions raises rather than mis-read.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-    minilake,
-)
-from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.streaming import (
-    jobs,
+    deltaproto as dp,
+    deltastream,
 )
 
 
@@ -46,18 +50,19 @@ def _apply_feed(feed_df):
 
 def test_plain_feed_skips_compaction(spark, tmp_path):
     path = str(tmp_path / "lake")
-    minilake.commit_append(_df(spark, 0, 50), path)
-    v1 = minilake.commit_append(_df(spark, 50, 80), path)
-    minilake.compact(spark, path)
-    minilake.commit_append(_df(spark, 80, 90), path)
+    dp.write_delta(_df(spark, 0, 50), path)
+    v1 = dp.write_delta(_df(spark, 50, 80), path)
+    dp.compact_delta(spark, path)
+    dp.write_delta(_df(spark, 80, 90), path)
     # consumer synced through v1: sees ONLY the post-compact append
     got = sorted(
         r["doc_id"]
-        for r in minilake.read_changes(spark, path, since_version=v1).collect()
+        for r in dp.read_changes_delta(spark, path, since_version=v1 + 1)
+        .collect()
     )
     assert got == list(range(80, 90))
-    # a full-history plain feed over appends+compact = all appended rows
-    allrows = minilake.read_changes(spark, path, since_version=-1)
+    # a full-history feed over appends+compact = all appended rows
+    allrows = dp.read_changes_delta(spark, path, since_version=0)
     assert allrows.count() == 90
 
 
@@ -65,67 +70,93 @@ def test_change_feed_apply_parity_delete_restore_overwrite(spark, tmp_path):
     """The acid test: replaying the feed reproduces the live snapshot
     exactly through append → delete → compact → overwrite → restore."""
     path = str(tmp_path / "lake")
-    minilake.commit_append(
-        _df(spark, 0, 100).repartitionByRange(4, "doc_id"),
-        path,
-        stat_cols=["doc_id"],
-    )
-    minilake.delete_where(spark, path, "doc_id", 20, 39)
-    minilake.compact(spark, path)
-    v_pre_over = minilake.versions(path)[-1]
-    minilake.commit_overwrite(_df(spark, 500, 520, tag=1), path)
-    minilake.restore(path, v_pre_over)
+    dp.write_delta(_df(spark, 0, 100).repartitionByRange(4, "doc_id"), path)
+    dp.delete_where_delta(spark, path, "doc_id", 20, 39)
+    v_compact = dp.compact_delta(spark, path)
+    dp.write_delta(_df(spark, 500, 520, tag=1), path, mode="overwrite")
+    v_restore = dp.restore_delta(spark, path, v_compact)
 
-    feed = minilake.read_changes(spark, path, since_version=-1, change_feed=True)
+    feed = dp.read_changes_delta(spark, path, since_version=0)
     applied = _apply_feed(feed)
     snap = sorted(
-        (r["doc_id"], r["v"])
-        for r in minilake.read_snapshot(spark, path).collect()
+        (r["doc_id"], r["v"]) for r in dp.read_delta(spark, path).collect()
     )
     assert applied == snap
+    assert snap == [(i, i * 10) for i in range(100) if not 20 <= i <= 39]
     # the delete leg is exactly the predicate rows, tagged per commit
     deletes = feed.filter(
         (F.col("_change_type") == "delete") & (F.col("_commit_version") == 1)
     )
     assert sorted(r["doc_id"] for r in deletes.collect()) == list(range(20, 40))
     # compaction contributed nothing
-    compact_vs = [
-        h["version"] for h in minilake.history(path) if h["mode"] == "compact"
-    ]
-    assert compact_vs and feed.filter(
-        F.col("_commit_version").isin(compact_vs)
-    ).count() == 0
+    assert feed.filter(F.col("_commit_version") == v_compact).count() == 0
+    # the restore leg: the overwrite's rows out, the compacted rows back
+    legs = {
+        k: sorted(r["doc_id"] for r in rows)
+        for k in ("insert", "delete")
+        for rows in [
+            feed.filter(
+                (F.col("_commit_version") == v_restore)
+                & (F.col("_change_type") == k)
+            ).collect()
+        ]
+    }
+    assert legs == {
+        "insert": [i for i in range(100) if not 20 <= i <= 39],
+        "delete": list(range(500, 520)),
+    }
 
 
 def test_change_feed_merge_still_raises(spark, tmp_path):
+    """MERGE commits carry `cdc` actions, so the feed is row-exact:
+    pre/post images for matched keys, inserts for new keys.  A rewrite
+    commit WITHOUT them — what an engine that writes no change data
+    leaves — still raises rather than double-count rewritten rows."""
     path = str(tmp_path / "lake")
-    minilake.commit_append(_df(spark, 0, 50), path, stat_cols=["doc_id"])
-    minilake.merge_upsert_lake(spark, _df(spark, 10, 15, tag=3), path, "doc_id")
-    with pytest.raises(ValueError, match="merge"):
-        minilake.read_changes(
-            spark, path, since_version=-1, change_feed=True
-        ).collect()
+    dp.write_delta(_df(spark, 0, 50), path)
+    v = dp.merge_upsert_delta(spark, _df(spark, 45, 55, tag=3), path, "doc_id")
+    feed = dp.read_changes_delta(spark, path, since_version=v)
+    got = sorted(
+        (r["_change_type"], r["doc_id"], r["v"]) for r in feed.collect()
+    )
+    assert got == sorted(
+        [("update_preimage", i, i * 10) for i in range(45, 50)]
+        + [("update_postimage", i, i * 10 + 3) for i in range(45, 50)]
+        + [("insert", i, i * 10 + 3) for i in range(50, 55)]
+    )
+    live = dp._fold_delta_state(spark, path, None)[1]
+    victim = sorted(live)[0]
+    copy = f"copy-{os.path.basename(victim)}"
+    shutil.copy(os.path.join(path, victim), os.path.join(path, copy))
+    dp._claim_delta_version(
+        path,
+        [
+            json.dumps({"commitInfo": {"operation": "DELETE"}}),
+            json.dumps({"remove": {"path": victim, "dataChange": True}}),
+            json.dumps(
+                {"add": {**live[victim], "path": copy, "dataChange": True}}
+            ),
+        ],
+    )
+    with pytest.raises(ValueError, match="without cdc"):
+        dp.read_changes_delta(spark, path, since_version=v + 1).collect()
 
 
 def test_stream_source_survives_interleaved_optimize(spark, sf_dir, tmp_path):
-    """format('minilake') stream: append → drain → OPTIMIZE/compact →
+    """format('deltaproto') stream: append → drain → OPTIMIZE/compact →
     append → drain again.  The second drain skips the rewrite commits
     and delivers ONLY the new append — parity with the batch rows,
     registry ingest keeps working (the r7 cross-quadrant pipeline no
     longer breaks on routine maintenance)."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-    )
-
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "lake")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    minilake.commit_append(_df(spark, 0, 40), path, stat_cols=["doc_id"])
+    dp.write_delta(_df(spark, 0, 40), path)
 
     def drain():
         q = (
-            spark.readStream.format("minilake")
+            spark.readStream.format("deltaproto")
             .load(path)
             .writeStream.format("parquet")
             .option("path", out)
@@ -138,25 +169,24 @@ def test_stream_source_survives_interleaved_optimize(spark, sf_dir, tmp_path):
     drain()
     assert spark.read.parquet(out).count() == 40
 
-    minilake.compact(spark, path)
-    minilake.optimize_zorder(spark, path, "doc_id", "v", n_files=2)
-    minilake.commit_append(_df(spark, 40, 55), path)
+    dp.compact_delta(spark, path)
+    dp.optimize_zorder_delta(spark, path, "doc_id", "v", n_files=2)
+    dp.write_delta(_df(spark, 40, 55), path)
     drain()
     got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     assert got == list(range(55))  # new rows once, rewrites never re-sent
 
 
 def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
-    """The incremental dedup registry fed from a minilake stream keeps
+    """The incremental dedup registry fed from a Delta stream keeps
     exactly-once row delivery when an OPTIMIZE lands between drains."""
     import glob
 
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
         load_table,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "lake")
     reg = str(tmp_path / "registry")
     ckpt = str(tmp_path / "ckpt")
@@ -165,10 +195,10 @@ def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
     )
     half = docs.filter(F.col("doc_id") % 2 == 0)
     rest = docs.filter(F.col("doc_id") % 2 == 1)
-    minilake.commit_append(half, path, stat_cols=["doc_id"])
+    dp.write_delta(half, path)
 
     def drain():
-        stream = spark.readStream.format("minilake").load(path)
+        stream = spark.readStream.format("deltaproto").load(path)
         q = (
             stream.writeStream.foreachBatch(
                 lambda b, bid: b.write.mode("overwrite").parquet(
@@ -182,8 +212,8 @@ def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
         assert q.awaitTermination(120)
 
     drain()
-    minilake.compact(spark, path)
-    minilake.commit_append(rest, path)
+    dp.compact_delta(spark, path)
+    dp.write_delta(rest, path)
     drain()  # must not raise on the compact commit
     landed = spark.read.parquet(*sorted(glob.glob(f"{reg}/batch=*")))
     assert landed.count() == docs.count()
@@ -191,27 +221,19 @@ def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
 
 
 def test_stream_change_feed_option(spark, tmp_path):
-    """format('minilake') with readChangeFeed=true streams the CHANGE
+    """format('deltaproto') with readChangeFeed=true streams the CHANGE
     FEED: inserts for appends, exact delete rows for DV and predicate
     deletes, nothing for compaction — exactly-once across drains with
     a persistent checkpoint."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-    )
-
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "lake")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    minilake.commit_append(
-        _df(spark, 0, 60).repartitionByRange(3, "doc_id"),
-        path,
-        stat_cols=["doc_id"],
-    )
+    dp.write_delta(_df(spark, 0, 60).repartitionByRange(3, "doc_id"), path)
 
     def drain():
         q = (
-            spark.readStream.format("minilake")
+            spark.readStream.format("deltaproto")
             .option("readChangeFeed", "true")
             .load(path)
             .writeStream.format("parquet")
@@ -227,9 +249,9 @@ def test_stream_change_feed_option(spark, tmp_path):
     assert first.count() == 60
     assert {r["_change_type"] for r in first.collect()} == {"insert"}
 
-    minilake.delete_where(spark, path, "doc_id", 10, 19, strategy="dv")
-    minilake.delete_where(spark, path, "doc_id", 40, 44)  # rewrite path
-    minilake.compact(spark, path)
+    dp.delete_where_delta(spark, path, "doc_id", 10, 19, strategy="dv")
+    dp.delete_where_delta(spark, path, "doc_id", 40, 44)  # rewrite path
+    dp.compact_delta(spark, path)
     drain()
     feed = spark.read.parquet(out)
     deletes = feed.filter(F.col("_change_type") == "delete")
@@ -243,7 +265,7 @@ def test_stream_change_feed_option(spark, tmp_path):
         r["doc_id"] for r in deletes.collect()
     }
     snap_ids = {
-        r["doc_id"] for r in minilake.read_snapshot(spark, path).collect()
+        r["doc_id"] for r in dp.read_delta(spark, path).collect()
     }
     assert net == snap_ids
     # third drain with nothing new: no extra rows

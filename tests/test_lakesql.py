@@ -8,6 +8,7 @@ loudly with the workaround named, never a silent misparse.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -266,21 +267,16 @@ def test_loud_refusals(spark, sf_dir, tmp_path):
             "AND t.source = s.source WHEN MATCHED THEN UPDATE SET * "
             "WHEN NOT MATCHED THEN INSERT *",
         )
-    # r15 narrowed the IN-list refusal: delta DELETE … IN now lowers
-    # onto the general predicate rewrite; the refusal remains only on
-    # the minilake tier, which has no general rewrite
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as _ml,
-    )
-
-    mlp = str(tmp_path / "ref_ml")
-    _ml.commit_append(docs.limit(5), mlp, stat_cols=["doc_id"])
-    lq.register_lake_table("t_refuse_ml", "minilake", mlp)
+    # delta DELETE … IN lowers onto the general predicate rewrite; a
+    # plain parquet location has no log to rewrite and refuses
+    pqp = str(tmp_path / "ref_pq")
+    docs.limit(5).write.parquet(pqp)
+    lq.register_lake_table("t_refuse_pq", "parquet", pqp)
     with pytest.raises(ValueError, match="delta/iceberg"):
-        lq.lake_sql(spark, "DELETE FROM t_refuse_ml WHERE doc_id IN (1, 2)")
+        lq.lake_sql(spark, "DELETE FROM t_refuse_pq WHERE doc_id IN (1, 2)")
     with pytest.raises(ValueError, match="delta/iceberg"):
         lq.lake_sql(
-            spark, "DELETE FROM t_refuse_ml WHERE doc_id < 2 OR lang = 'xx'"
+            spark, "DELETE FROM t_refuse_pq WHERE doc_id < 2 OR lang = 'xx'"
         )
     with pytest.raises(ValueError, match="cannot parse MERGE"):
         lq.lake_sql(
@@ -523,20 +519,24 @@ def test_merge_delete_both_tiers(spark, sf_dir, tmp_path):
 
 
 def test_minilake_full_sql_lifecycle(spark, sf_dir, tmp_path):
-    """The minilake tier through the dispatcher: CTAS, MERGE upsert,
-    range DELETE, INSERT OVERWRITE, OPTIMIZE, VACUUM, DESCRIBE
-    HISTORY, SHOW TABLES — each lowering onto the zone-map-pruned
-    helpers, content pinned at every step."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
+    """The statement chain a notebook written against the retired
+    minilake format runs: `USING minilake` now refuses with the named
+    unknown-format error, and the same chain on Delta — CTAS, MERGE
+    upsert, range DELETE, INSERT OVERWRITE, OPTIMIZE, VACUUM, DESCRIBE
+    HISTORY, SHOW TABLES — lowers onto the stats-pruned helpers,
+    content pinned at every step."""
     docs = _docs(spark, sf_dir)
     docs.limit(100).createOrReplaceTempView("ml_src")
     loc = str(tmp_path / "ml_t")
+    with pytest.raises(ValueError, match="unsupported"):
+        lq.lake_sql(
+            spark,
+            f"CREATE TABLE t_ml_sql USING minilake LOCATION '{loc}' AS "
+            "SELECT doc_id, lang, text FROM ml_src",
+        )
     lq.lake_sql(
         spark,
-        f"CREATE TABLE t_ml_sql USING minilake LOCATION '{loc}' AS "
+        f"CREATE TABLE t_ml_sql USING delta LOCATION '{loc}' AS "
         "SELECT doc_id, lang, text FROM ml_src",
     )
     ups = (
@@ -551,12 +551,12 @@ def test_minilake_full_sql_lifecycle(spark, sf_dir, tmp_path):
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
     )
     lq.lake_sql(spark, "DELETE FROM t_ml_sql WHERE doc_id BETWEEN 50 AND 69")
-    snap = minilake.read_snapshot(spark, loc)
+    snap = dp.read_delta(spark, loc)
     assert snap.count() == 80
     assert snap.filter("doc_id < 10 AND text <> UPPER(text)").count() == 0
     lq.lake_sql(spark, "OPTIMIZE t_ml_sql")
     lq.lake_sql(spark, "VACUUM t_ml_sql RETAIN 0 HOURS")
-    assert minilake.read_snapshot(spark, loc).count() == 80
+    assert dp.read_delta(spark, loc).count() == 80
     hist = lq.lake_sql(spark, "DESCRIBE HISTORY t_ml_sql").collect()
     assert [h["version"] for h in hist] == [3, 2, 1, 0]
     lq.lake_sql(
@@ -564,13 +564,29 @@ def test_minilake_full_sql_lifecycle(spark, sf_dir, tmp_path):
         "INSERT OVERWRITE t_ml_sql SELECT doc_id, lang, text FROM "
         "ml_src WHERE doc_id < 5",
     )
-    assert minilake.read_snapshot(spark, loc).count() == 5
+    assert dp.read_delta(spark, loc).count() == 5
     shown = {
         (r["name"], r["format"])
         for r in lq.lake_sql(spark, "SHOW TABLES").collect()
     }
-    assert ("t_ml_sql", "minilake") in shown
+    assert ("t_ml_sql", "delta") in shown
     lq.lake_sql(spark, "DROP TABLE t_ml_sql")
+
+
+def test_minilake_format_is_unknown(tmp_path):
+    """The retired minilake format is refused by name wherever a
+    format string enters the catalog: a direct registration, and a
+    saved catalog file that still names a minilake table."""
+    with pytest.raises(ValueError, match="unknown format 'minilake'"):
+        lq.register_lake_table("t_old_ml", "minilake", str(tmp_path / "t"))
+    f = tmp_path / "catalog.json"
+    f.write_text(json.dumps({
+        "tables": {"t_old_ml": {"format": "minilake", "path": str(tmp_path)}}
+    }))
+    with pytest.raises(ValueError, match="unknown format 'minilake'"):
+        lq.load_lake_catalog(str(f))
+    with pytest.raises(KeyError):
+        lq.lake_table_location("t_old_ml")
 
 
 def test_iceberg_update_merge_on_read(spark, sf_dir, tmp_path):

@@ -39,6 +39,17 @@ TOUCHED = [
     "mm_video_mp4_pipeline",
     "mm_image_jpeg_pipeline",
     "mm_image_png_pipeline",
+    # the table-format entries: their lakes are built and read through
+    # the Delta log, so a value match pins every lake operation on the
+    # path (append, pruned and DV deletes, compaction, CDF, bloom and
+    # partition skipping, view refresh) against the raw parquet
+    "lake_documents_roundtrip",
+    "lake_changes_feed",
+    "lake_dv_roundtrip",
+    "lake_partitioned_scan",
+    "lake_bloom_lookup",
+    "lake_incremental_view",
+    "med_q02_lake_table",
 ]
 
 
